@@ -34,10 +34,9 @@ object BenchChild {
   }
 
   def pipelineRun(spark: SparkSession, nTurns: Long): Double = {
-    val salt = sys.props.getOrElse("graft.bench.salt", "16384").toInt
     val turns = Transcripts.synthetic(spark, nTurns, nConvs = 50000, skewPct = 2)
     val routed = Pipeline.routed(turns, Transcripts.lookup(spark),
-      PipelineConfig(saltBlockSize = Some(salt)))
+      PipelineConfig(saltBlockSize = Some(16384)))
     val t0 = System.nanoTime()
     routed.agg(
       count(lit(1)),
@@ -47,53 +46,20 @@ object BenchChild {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Per-stage accounting listener (enabled with -Dgraft.bench.stages=true):
-    * for each stage, wall duration, task count, total task time and max task
-    * time — pinpoints where cores go idle (straggler waves vs barriers).
-    */
-  private class StageAcct extends org.apache.spark.scheduler.SparkListener {
-    case class S(name: String, submitted: Long, completed: Long, nTasks: Int,
-        taskTimeMs: Long, maxTaskMs: Long)
-    val stages = scala.collection.mutable.ArrayBuffer[S]()
-    private val taskTime = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)]()
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val d = e.taskInfo.duration
-      taskTime.merge(e.stageId, (d, d, 1),
-        (a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3))
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = e.stageInfo
-      val (tot, mx, n) = taskTime.getOrDefault(i.stageId, (0L, 0L, 0))
-      stages += S(s"${i.stageId}:${i.name.takeWhile(_ != ' ')}",
-        i.submissionTime.getOrElse(0L), i.completionTime.getOrElse(0L), n, tot, mx)
-    }
-    def reset(): Unit = { stages.clear(); taskTime.clear() }
-    def report(): String = stages.sortBy(_.submitted).map { s =>
-      val wall = (s.completed - s.submitted) / 1000.0
-      s"""{"stage":"${s.name}","wall":$wall,"tasks":${s.nTasks},"task_sec":${s.taskTimeMs / 1000.0},"max_task_sec":${s.maxTaskMs / 1000.0}}"""
-    }.mkString("[", ",", "]")
-  }
-
   def main(args: Array[String]): Unit = {
     val Array(cpus, nTurns, parts) = args.map(_.toLong)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-child-$cpus")
       .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.props.getOrElse("graft.bench.aqe", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val acct = if (sys.props.get("graft.bench.stages").contains("true"))
-      Some(new StageAcct) else None
-    acct.foreach(spark.sparkContext.addSparkListener)
     pipelineRun(spark, nTurns) // FULL-SIZE warmup: JIT, codegen, allocator
     System.gc()
-    acct.foreach(_.reset())
     // Two timed runs, min reported: clean same-config JVMs still measured
     // 2× apart on single timed runs (JIT tier luck / transient host state);
     // the min of two post-warmup runs is a far tighter capability estimate.
@@ -102,10 +68,6 @@ object BenchChild {
     val sec2 = pipelineRun(spark, nTurns)
     val sec = math.min(sec1, sec2)
     val after = cpuTicks()
-    acct.foreach { a =>
-      Thread.sleep(300) // let the listener bus drain
-      println(s"GRAFT_STAGES ${a.report()}")
-    }
     val d = after.zip(before).map { case (a, b) => a - b }
     val total = math.max(1L, d.sum)
     val hz = 100.0 // USER_HZ ticks/sec

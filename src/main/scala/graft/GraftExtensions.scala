@@ -5,17 +5,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Spark-idiomatic library integration point: registers every fused graft
-  * expression in the session catalog via
+/** The one way to call graft's fused expressions by SQL name: registers
+  * every one of them in the session catalog via
   *
   * {{{ --conf spark.sql.extensions=graft.GraftExtensions }}}
   *
   * — the same `SparkSessionExtensions` mechanism Iceberg and Delta use —
   * so SQL-text users (spark-sql, Thrift server, notebooks) get the
-  * compiled hot-path functions without touching the Column API or calling
-  * the per-object `register` helpers. Injection happens at session build,
-  * before any query parses, and applies to every session cloned from the
-  * builder.
+  * compiled hot-path functions. The Column APIs (`ParseVals(col)`,
+  * `MapRows(names, vals)`, …) need no registration at all. Injection
+  * happens at session build, before any query parses, and applies to
+  * every session cloned from the builder.
   *
   * `graft_srp_bucket(emb [, nPlanes [, planeOffset]])` folds its plane
   * arguments at registration (they parameterize codegen, so they must be
@@ -49,8 +49,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  // these two expressions have no SQL-name registration helper of their
-  // own (they were Column-API-only before the extensions entry point)
+  // these two expressions keep no `Name` in their own companion object
   val ShingleSetName = "graft_shingle_set"
   val SrpBucketName = "graft_srp_bucket"
 

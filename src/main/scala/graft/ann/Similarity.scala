@@ -84,6 +84,7 @@ object Similarity {
     * per-candidate after the distinct, the same narrow-pair discipline as
     * [[graft.dedup.Dedup.simhashCandidates]].
     * Output: (q, rank, neighbor).
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def lshTopKMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
       nPlanes: Int = 4, nTables: Int = 8): DataFrame = {
@@ -307,6 +308,7 @@ object Similarity {
     * joined back only once per surviving candidate for the cosine verify.
     * The corpus never self-cross-joins and never shuffles its payload
     * into the quadratic stage (plan-asserted in PlanSpec).
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def cosineNearDup(emb: DataFrame, threshold: Double,
       nPlanes: Int = 4, nTables: Int = 16): DataFrame = {
@@ -404,6 +406,7 @@ object Similarity {
     * quadratic work stays m²-bounded while assignment stays one broadcast.
     * Output: (a, b) pairs with cosine ≥ threshold sharing ≥ 1 probed
     * cluster, a < b.
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def semDedupPairs(emb: DataFrame, threshold: Double,
       nCentroids: Int = 16, nProbe: Int = 2): DataFrame = {

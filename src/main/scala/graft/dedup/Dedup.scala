@@ -49,7 +49,6 @@ object Dedup {
     * profiled ~150× slower.
     */
   def minhashSigs(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
     docs
       .filter(size(TextAnalysis.tokens(col("text"))) >= 3)
       .select(col("doc_id"),
@@ -90,6 +89,7 @@ object Dedup {
     * cluster while the pruned members are re-found through their OTHER
     * bands or transitively via the keeper. Uncapped (`Int.MaxValue`) is
     * the OPT-IN (graded by `dedup_minhash_pairs_uncapped`).
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def minhashCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val bandsRaw = minhashBands(docs)
@@ -153,6 +153,7 @@ object Dedup {
     * (measured on the 5k-doc sf0.1 corpus: raw join tuples 5.0M → 1.2M,
     * distinct candidate pairs 4.02M → 848k, recall of true hamming ≤ 6
     * pairs 5840/5840).
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
     // Recall guarantee: hamming ≤ maxHamming flips at most maxHamming of
@@ -226,6 +227,7 @@ object Dedup {
     * the growing lineage each round (VERDICT r02 #4); iteration count is
     * bounded by the largest component's diameter, which LSH-verified dup
     * clusters (near-cliques) keep tiny.
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def resolveKeepers(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     // checkpoint the pair list FIRST: the symmetric union references it
@@ -236,7 +238,7 @@ object Dedup {
       .union(p.select(col("b").as("x"), col("a").as("y")))
       .localCheckpoint()
     val init = edges.select(col("x")).distinct().withColumn("keeper", col("x"))
-    propagateMin(edges, init, maxIters, identity)
+    propagateMin(edges, init, maxIters)
       .select(col("x").as("doc_id"), col("keeper"))
   }
 
@@ -252,6 +254,7 @@ object Dedup {
     * through the same edge-keyed joins). `priority`: (doc_id, prio);
     * missing docs default to prio 0.
     * Output: (doc_id, keeper).
+    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def resolveKeepersBy(pairs: DataFrame, priority: DataFrame,
       maxIters: Int = 50): DataFrame = {
@@ -266,7 +269,7 @@ object Dedup {
       .select(col("x"),
         struct((-coalesce(col("prio"), lit(0L))).as("np"),
           col("x").as("id")).as("keeper"))
-    propagateMin(edges, init, maxIters, _.getField("id"))
+    propagateMin(edges, init, maxIters)
       .select(col("x").as("doc_id"), col("keeper.id").as("keeper"))
   }
 
@@ -278,11 +281,10 @@ object Dedup {
     * rounds) was implemented and MEASURED SLOWER on every resolve query —
     * the LSH/cluster-verified dup components have diameter 3–4, so
     * jumping saves at most one round while adding a label-table self-join
-    * to every round. `labelNode` (label → node id) is kept in the
-    * signature for symmetry with the struct-label mode.
+    * to every round.
     */
   private def propagateMin(edges: DataFrame, init: DataFrame,
-      maxIters: Int, labelNode: Column => Column): DataFrame = {
+      maxIters: Int): DataFrame = {
     var labels = init.localCheckpoint()
     var converged = false
     var it = 0
@@ -310,7 +312,6 @@ object Dedup {
     * (first 8 md5 bytes). One compiled pass per doc ([[graft.functions.SimHashSig]]).
     */
   def simhashDocs(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashSig.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.SimHashSig(TextAnalysis.tokens(col("text"))).as("sh64"))
   }

@@ -212,7 +212,7 @@ object CanonicalJson {
   }
 
   /** Canonical JSON document as a single codegen'd column over the routed
-    * frame (requires [[GoJsonEscape.register]] on the session).
+    * frame.
     */
   def jsonColumn: Column = {
     val header = concat(

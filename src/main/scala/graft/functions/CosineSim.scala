@@ -65,16 +65,9 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   val Name = "graft_cosine"
 
-  /** SQL-name registration (optional — the Column API below is
-    * self-contained; register only to call `graft_cosine(...)` from SQL).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-
   /** Column API, self-contained (ADVICE r03: the registry-routed form made
-    * external callers fail analysis unless an internal entry point had
-    * registered the name first). Inputs: two array<double> columns.
+    * external callers fail analysis unless the name had been registered
+    * first). Inputs: two array<double> columns.
     */
   def apply(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge

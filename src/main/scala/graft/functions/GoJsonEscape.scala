@@ -36,15 +36,7 @@ object GoJsonEscape {
 
   val Name = "go_json_escape"
 
-  /** Register in the session's FunctionRegistry (needed once per session;
-    * idempotent) so the expression is usable from both the Column API and
-    * SQL text.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => GoJsonEscape(exprs.head), "built-in")
-
-  /** Column API: `go_json_escape(col)` (requires [[register]]). */
+  /** Column API, self-contained. */
   def apply(c: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(GoJsonEscape(GraftExpressionBridge.expression(c)))

@@ -70,11 +70,9 @@ object MapRows {
     * canonical repr, exact notice — as an InternalRow(repr, notice,
     * entries). Shared by [[MapRows]] and the fused route expression
     * ([[RouteMsgs]]) so both produce bit-identical values.
-    * `withEntries = false` skips materializing the entries array (the
-    * struct field is null) for consumers that never read it.
     */
   private[functions] def mapPhysicalRow(names: ArrayData,
-      vals: ArrayData, withEntries: Boolean = true): InternalRow = {
+      vals: ArrayData): InternalRow = {
     val nNames = names.numElements()
     val nVals = vals.numElements()
     val mismatch = nVals != nNames
@@ -100,12 +98,12 @@ object MapRows {
       i += 1
     }
     val sb = new java.lang.StringBuilder(32)
-    val entries = if (withEntries) new Array[Any](nVals) else null
+    val entries = new Array[Any](nVals)
     i = 0
     while (i < nVals) {
       if (i > 0) sb.append(',')
       sb.append(keys(i).toString).append('=').append(vs(i).toString)
-      if (withEntries) entries(i) = InternalRow(keys(i), vs(i))
+      entries(i) = InternalRow(keys(i), vs(i))
       i += 1
     }
     val notice =
@@ -113,15 +111,10 @@ object MapRows {
       else if (nVals > nNames) noticeLonger
       else noticeShorter
     InternalRow(
-      UTF8String.fromString(sb.toString), notice,
-      if (withEntries) new GenericArrayData(entries) else null)
+      UTF8String.fromString(sb.toString), notice, new GenericArrayData(entries))
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => MapRows(exprs(0), exprs(1)), "built-in")
-
-  /** Column API, self-contained (no prior [[register]] needed). */
+  /** Column API, self-contained. */
   def apply(names: Column, vals: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(MapRows(GraftExpressionBridge.expression(names),

@@ -60,11 +60,7 @@ case class MinHashSig(child: Expression)
 object MinHashSig {
   val Name = "graft_minhash_sig"
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => MinHashSig(exprs.head), "built-in")
-
-  /** Column API (requires [[register]]); input: token array. */
+  /** Column API, self-contained; input: token array. */
   def apply(tokens: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(MinHashSig(GraftExpressionBridge.expression(tokens)))

@@ -107,13 +107,11 @@ case class ParseVals(child: Expression)
 object ParseVals {
   val Name = "graft_parse_vals"
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => ParseVals(exprs.head), "built-in")
-
-  /** Column API (requires [[register]]). */
-  def apply(payload: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, payload)
+  /** Column API, self-contained. */
+  def apply(payload: Column): Column = {
+    import org.apache.spark.sql.GraftExpressionBridge
+    GraftExpressionBridge.column(ParseVals(GraftExpressionBridge.expression(payload)))
+  }
 
   /** Escape a raw value for embedding in the `vals=` grammar (generator /
     * test-fixture side; the parser above inverts it).

@@ -3,7 +3,8 @@ package graft.functions
 import graft.model.Model
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -27,7 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * query) and plan readability. Same construction as [[MapRows]].
   *
   * Inputs (children, in order): kind, suppressed, stmt, field_names, vals,
-  * committed (= matched && txn_id IS NOT NULL).
+  * committed (= matched && txn_id IS NOT NULL) — string, boolean, string,
+  * array<string>, array<array<string>>, boolean, checked at analysis so a
+  * mis-typed column fails the query plan instead of throwing a
+  * ClassCastException per row.
   *
   * Output: array<struct< event_type, row_repr, old_repr, new_repr,
   * mapping_notice, new_mapping_notice, query, row_entries, old_entries,
@@ -42,8 +46,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - everything else (commit / BEGIN / SAVEPOINT / noise / unmapped /
   *    uncommitted) → empty array
   */
-case class RouteMsgs(children: Seq[Expression], withEntries: Boolean = true)
+case class RouteMsgs(children: Seq[Expression])
     extends Expression with CodegenFallback {
+
+  private val inputTypes: Seq[DataType] = Seq(StringType, BooleanType,
+    StringType, ArrayType(StringType), ArrayType(ArrayType(StringType)), BooleanType)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExpectsInputTypes.checkInputDataTypes(children, inputTypes)
 
   private val entryType = StructType(Seq(
     StructField("k", StringType), StructField("v", StringType)))
@@ -105,10 +115,9 @@ case class RouteMsgs(children: Seq[Expression], withEntries: Boolean = true)
       val out = new Array[Any](n)
       var r = 0
       while (r < n) {
-        val m = MapRows.mapPhysicalRow(names, vals.getArray(r), withEntries)
+        val m = MapRows.mapPhysicalRow(names, vals.getArray(r))
         out(r) = InternalRow(et, m.getUTF8String(0), null, null,
-          m.getUTF8String(1), null, null,
-          if (withEntries) m.getArray(2) else null, null, null)
+          m.getUTF8String(1), null, null, m.getArray(2), null, null)
         r += 1
       }
       return new GenericArrayData(out)
@@ -126,14 +135,12 @@ case class RouteMsgs(children: Seq[Expression], withEntries: Boolean = true)
       val out = new Array[Any](n / 2)
       var p = 0
       while (p < n / 2) {
-        val old = MapRows.mapPhysicalRow(names, vals.getArray(2 * p), withEntries)
-        val nw = MapRows.mapPhysicalRow(names, vals.getArray(2 * p + 1), withEntries)
+        val old = MapRows.mapPhysicalRow(names, vals.getArray(2 * p))
+        val nw = MapRows.mapPhysicalRow(names, vals.getArray(2 * p + 1))
         out(p) = InternalRow(etUpdate, null,
           old.getUTF8String(0), nw.getUTF8String(0),
           old.getUTF8String(1), nw.getUTF8String(1),
-          null, null,
-          if (withEntries) old.getArray(2) else null,
-          if (withEntries) nw.getArray(2) else null)
+          null, null, old.getArray(2), nw.getArray(2))
         p += 1
       }
       return new GenericArrayData(out)
@@ -152,9 +159,9 @@ object RouteMsgs {
     * field_names, vals, committed.
     */
   def apply(kind: Column, suppressed: Column, stmt: Column, names: Column,
-      vals: Column, committed: Column, withEntries: Boolean): Column = {
+      vals: Column, committed: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
     column(RouteMsgs(Seq(kind, suppressed, stmt, names, vals, committed)
-      .map(expression), withEntries))
+      .map(expression)))
   }
 }

@@ -71,11 +71,7 @@ case class SimHashSig(child: Expression)
 object SimHashSig {
   val Name = "graft_simhash_sig"
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SimHashSig(exprs.head), "built-in")
-
-  /** Column API (requires [[register]]); input: token array. */
+  /** Column API, self-contained; input: token array. */
   def apply(tokens: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(SimHashSig(GraftExpressionBridge.expression(tokens)))

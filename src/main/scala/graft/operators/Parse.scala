@@ -69,7 +69,6 @@ object Parse {
     * it after the txn-stamp exchange.
     */
   def withVals(parsedKind: DataFrame): DataFrame = {
-    graft.functions.ParseVals.register(parsedKind.sparkSession)
     // "[a|b];[c|d]" -> [["a","b"],["c","d"]] — fused one-pass parser with
     // exactly-one-bracket strip + backslash escaping (see ParseVals; the
     // old transform(split(…), trim(…, "[]")) HOF chain was ~80 of 109 map-

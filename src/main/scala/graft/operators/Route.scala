@@ -61,7 +61,7 @@ object Route {
     // golden fixtures and the k3/k2b/e4 oracles.
     val msgs = graft.functions.RouteMsgs(
       col("kind"), col("suppressed"), col("stmt"), col("field_names"),
-      col("vals"), committedRow, withEntries = true)
+      col("vals"), committedRow)
 
     enriched
       .select(

@@ -73,12 +73,16 @@ object TxnStamp {
 
     // ONE aggregation produces the whole (conv, block) domain with the xid
     // of each block's first commit (null when none) — rows ≈ #blocks, not
-    // #turns. min_by(xid, turn_idx-of-commits) ≡ the previous
-    // min(struct(turn_idx, xid)).xid (same first-commit pick, null xid
-    // preserved, non-commits skipped via the null ordering key) but is a
-    // DECLARATIVE aggregate with a primitive buffer, so it plans as a
-    // HashAggregate — the struct-min forced a SortAggregate, i.e. a full
-    // extra sort of the frame in this branch.
+    // #turns. min_by(xid, turn_idx-of-commits) is a DECLARATIVE aggregate
+    // with a primitive buffer, so it plans as a HashAggregate — the
+    // previous min(struct(turn_idx, xid)).xid forced a SortAggregate, i.e.
+    // a full extra sort of the frame in this branch. The two agree (same
+    // first-commit pick, null xid preserved, non-commits skipped via the
+    // null ordering key) only while (conv_id, turn_idx) is unique: two
+    // commits sharing a turn_idx would make min_by pick either xid, where
+    // the struct-min took the smaller. The built-in sources number turns
+    // per conversation, so it holds for them; the window in [[stamp]]
+    // needs the same uniqueness for a deterministic order.
     val summary = withBlock.groupBy("conv_id", "salt_block")
       .agg(min_by(col("xid"),
         when(col("kind") === "commit", col("turn_idx"))).as("first_xid"))

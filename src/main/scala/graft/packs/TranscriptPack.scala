@@ -185,13 +185,11 @@ object TranscriptPack extends QueryPack {
     // consumer_chain.go:103-109) — Query messages are oracle-expressible
     // because their payload needs no map-entry assembly and the generated
     // stmt corpus is escape-free (identity under Go escaping).
-    "k2_json_compact" -> ((s, dir) => {
-      graft.functions.GoJsonEscape.register(s)
+    "k2_json_compact" -> ((s, dir) =>
       Pipeline.routedFromEvents(s, dir)
         .filter(col("event_type") === "Query")
         .select(col("conv_id"), col("turn_idx"),
-          graft.functions.CanonicalJson.jsonColumnCompact.as("doc"))
-    }),
+          graft.functions.CanonicalJson.jsonColumnCompact.as("doc"))),
 
     // K2 row messages (VERDICT r02 #1-missing): compact json.Marshal for
     // Insert/Delete/Update — Data/OldData/NewData assembled from the same
@@ -201,13 +199,11 @@ object TranscriptPack extends QueryPack {
     // message types. The generated corpus is escape-free (verified: no
     // " \ < > & control chars in roles/tools/field names/vals), so Go
     // escaping is the identity and DuckDB can concatenate raw.
-    "k2b_json_rows" -> ((s, dir) => {
-      graft.functions.GoJsonEscape.register(s)
+    "k2b_json_rows" -> ((s, dir) =>
       Pipeline.routedFromEvents(s, dir)
         .filter(col("event_type") =!= "Query")
         .select(col("conv_id"), col("turn_idx"), col("event_type"),
-          graft.functions.CanonicalJson.jsonColumnCompact.as("doc"))
-    }),
+          graft.functions.CanonicalJson.jsonColumnCompact.as("doc"))),
 
     // G1/G2 streaming mode (VERDICT r02 #7): the reference's ACTUAL
     // sequential buffer-drain semantics (rows_event_buffer.go:7-24) as

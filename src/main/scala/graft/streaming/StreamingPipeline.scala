@@ -117,7 +117,6 @@ object StreamingPipeline {
     */
   def ndjsonSink(routedStream: DataFrame, outDir: String, checkpointDir: String,
       pretty: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.functions.GoJsonEscape.register(routedStream.sparkSession)
     val doc = if (pretty) graft.functions.CanonicalJson.jsonColumn
       else graft.functions.CanonicalJson.jsonColumnCompact
     routedStream.select(doc.as("value"))

@@ -6,13 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * marks `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`).
   *
   * Why it exists (ADVICE r03): graft's custom Catalyst expressions
-  * (CosineSim, MapRows, MinHashSig, SimHashSig, GoJsonEscape) expose a
-  * Column API. Routing that API through the session function registry made
-  * every public entry point depend on a prior `register(...)` call —
-  * external callers hit an unresolved-function analysis error. Building
-  * the Column directly from the Expression removes the registry
-  * dependency; this one-file `org.apache.spark.sql`-package shim is the
-  * standard extension-library technique for reaching the converter.
+  * (CosineSim, GoJsonEscape, MapRows, MinHashSig, ParseVals, RouteMsgs,
+  * ShingleSet, SimHashSig, SrpBucket) expose a Column API. Routing that
+  * API through the session function registry made every public entry
+  * point depend on the name being registered first — external callers hit
+  * an unresolved-function analysis error. Building the Column directly
+  * from the Expression removes the registry dependency; this one-file
+  * `org.apache.spark.sql`-package shim is the standard extension-library
+  * technique for reaching the converter. SQL-text names come only from
+  * [[graft.GraftExtensions]].
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

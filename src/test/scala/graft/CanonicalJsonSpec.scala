@@ -126,7 +126,6 @@ class CanonicalJsonSpec extends SparkSpec {
   }
 
   test("compact expression twin (jsonColumnCompact) equals the Scala renderer") {
-    graft.functions.GoJsonEscape.register(spark)
     val turns = mkTurns(Seq(
       ("c2", 1, "user", "EVENT insert rows=2 vals=[1|A <&> \"q\"|x];[2|héllo 世界|y]", "search"),
       ("c2", 2, "user", "EVENT update rows=2 vals=[1|a|old];[1|a|new]", "search"),
@@ -145,7 +144,6 @@ class CanonicalJsonSpec extends SparkSpec {
   }
 
   test("expression-level serializer (codegen'd GoJsonEscape) equals the Scala renderer") {
-    graft.functions.GoJsonEscape.register(spark)
     val turns = mkTurns(Seq(
       ("c1", 1, "user", "EVENT insert rows=2 vals=[1|ACME <&> \"q\"|x];[2|héllo 世界|y]", "search"),
       ("c1", 2, "user", "EVENT update rows=2 vals=[1|a|old];[1|a|new]", "search"),

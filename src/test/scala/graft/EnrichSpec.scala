@@ -33,7 +33,6 @@ class EnrichSpec extends SparkSpec {
     assert(r == "a=x,a1=y")
     assert(n == "")
     // and MapRows (the fused production path) agrees
-    graft.functions.MapRows.register(spark)
     val s = spark
     import s.implicits._
     val viaMapRows = Seq((Seq("a", "a1"), Seq(Seq("x", "y")))).toDF("names", "vals")

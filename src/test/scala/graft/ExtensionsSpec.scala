@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The `spark.sql.extensions=graft.GraftExtensions` integration point: a
   * session built with the extensions class must expose every fused graft
-  * expression to SQL TEXT with no Column-API or `register` call anywhere.
+  * expression to SQL TEXT with no Column-API call anywhere — it is the only
+  * source of SQL names. The Column APIs need neither it nor any other
+  * registration.
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -69,6 +71,35 @@ class ExtensionsSpec extends SparkSpec {
         .collect().head.getLong(0)
       assert(r.getAs[Long]("bucket_t2") == viaApi)
     }
+  }
+
+  test("every Column API resolves and computes on a session with no registrations") {
+    import graft.functions._
+    import org.apache.spark.sql.functions._
+    // newSession(): fresh function registry, no extensions — nothing named
+    val s = spark.newSession()
+    assert(!s.catalog.functionExists(ParseVals.Name))
+    val tokens = array(lit("a"), lit("b"), lit("c"), lit("a"), lit("b"), lit("c"))
+    val vec = array(lit(1.0), lit(2.0))
+    val r = s.range(1).select(
+      ParseVals(lit("[a|b];[c|d]")).as("vals"),
+      MapRows(array(lit("c1"), lit("c2")), array(array(lit("x"), lit("y")))).as("mapped"),
+      GoJsonEscape(lit("a\"b")).as("esc"),
+      MinHashSig(tokens).as("mh"),
+      SimHashSig(tokens).as("sim64"),
+      CosineSim(vec, vec).as("cos"),
+      ShingleSet(tokens).as("sh"),
+      SrpBucket(vec, 4).as("bucket4")).collect().head
+    assert(r.getAs[collection.Seq[collection.Seq[String]]]("vals")
+      .map(_.toList).toList == List(List("a", "b"), List("c", "d")))
+    assert(r.getAs[collection.Seq[org.apache.spark.sql.Row]]("mapped")
+      .head.getAs[String]("repr") == "c1=x,c2=y")
+    assert(r.getAs[String]("esc") == "a\\\"b")
+    assert(r.getAs[collection.Seq[Long]]("mh").nonEmpty)
+    r.getAs[Long]("sim64") // typed Long — resolution is the assertion
+    assert(math.abs(r.getAs[Double]("cos") - 1.0) < 1e-12)
+    assert(r.getAs[collection.Seq[String]]("sh").size == 3)
+    assert(r.getAs[Long]("bucket4") >= 0 && r.getAs[Long]("bucket4") < 16)
   }
 
   test("non-literal plane count is rejected with a clear error") {

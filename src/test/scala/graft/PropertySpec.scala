@@ -53,7 +53,6 @@ class PropertySpec extends SparkSpec {
     val cases = samples(rowsGen, 60)
     val s = spark
     import s.implicits._
-    ParseVals.register(s)
     val encoded = cases.map { rows =>
       rows.map(_.map(ParseVals.escapeValue).mkString("[", "|", "]")).mkString(";")
     }

@@ -140,7 +140,6 @@ class RouteSpec extends SparkSpec {
     // branch (query kept/suppressed, insert multi-row, delete, update
     // pairing incl. per-side notices, odd-update quarantine, mismatch
     // renames, unmapped, uncommitted, noise) exercised by the fixture
-    graft.functions.MapRows.register(spark)
     val entriesType = "array<struct<k:string,v:string>>"
     val nullStr = lit(null).cast("string")
     val nullEntries = lit(null).cast(entriesType)
@@ -177,7 +176,7 @@ class RouteSpec extends SparkSpec {
           element_at(mapped, i * 2 + 2).getField("entries"))))
       .otherwise(array().cast(s"array<struct<event_type:string,row_repr:string,old_repr:string,new_repr:string,mapping_notice:string,new_mapping_notice:string,query:string,row_entries:$entriesType,old_entries:$entriesType,new_entries:$entriesType>>"))
     val fused = graft.functions.RouteMsgs(col("kind"), col("suppressed"),
-      col("stmt"), names, vals, committed, withEntries = true)
+      col("stmt"), names, vals, committed)
     val enriched = Pipeline.enriched(mkTurns(Seq(
       ("c1", 1, "user", "EVENT insert rows=2 vals=[1|a|b];[2|c|d]", "search"),
       ("c1", 2, "user", "EVENT insert rows=1 vals=[1|too|many|cols]", "search"),
@@ -199,6 +198,17 @@ class RouteSpec extends SparkSpec {
     val diff = both.filter(
       !(col("legacy") <=> col("fused"))).collect()
     assert(diff.isEmpty, s"RouteMsgs diverges from legacy tree: ${diff.mkString("\n")}")
+  }
+
+  test("RouteMsgs rejects a mis-typed vals at analysis, before any row runs") {
+    // vals must be array<array<string>>: a flat array<string> fails the
+    // plan instead of throwing ClassCastException per row
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(graft.functions.RouteMsgs(lit("insert"), lit(false),
+        lit(""), array(lit("id")), array(lit("1")), lit(true)))
+    }
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    assert(e.getMessage.contains("ARRAY<ARRAY<STRING>>"), e.getMessage)
   }
 
   test("conservation ledger: every turn accounted (F09/A1)") {
