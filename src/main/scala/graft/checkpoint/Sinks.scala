@@ -2,7 +2,7 @@ package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Fan-out sink + snapshot/manifest checkpointing.
@@ -99,16 +99,20 @@ object Sinks {
       }
     }
 
-    Files.createDirectories(manifestDir(outDir))
+    val dir = Files.createDirectories(manifestDir(outDir))
+    val src = graft.functions.CanonicalJson.escape(source)
     pending.foreach { b =>
       val (n, c, mn, mx) = stats(b)
       val json =
-        s"""{"bucket": $b, "source": "$source",
+        s"""{"bucket": $b, "source": "$src",
            | "n_routed": $n,
            | "n_convs_approx": $c,
            | "min_pos": $mn,
            | "max_pos": $mx}""".stripMargin
-      Files.writeString(manifestDir(outDir).resolve(s"bucket-$b.json"), json)
+      // commit by rename: a crash mid-write leaves only the temp name,
+      // which completedBuckets does not count, never a truncated manifest
+      val tmp = Files.writeString(dir.resolve(s".bucket-$b.json.tmp"), json)
+      Files.move(tmp, dir.resolve(s"bucket-$b.json"), StandardCopyOption.ATOMIC_MOVE)
     }
     pending.size
   }

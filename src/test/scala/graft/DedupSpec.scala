@@ -55,6 +55,44 @@ class DedupSpec extends SparkSpec {
     got.values.toSet.foreach { (k: Long) => assert(got(k) == k) }
   }
 
+  test("empty pair input resolves to zero rows") {
+    val s = spark
+    import s.implicits._
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(Dedup.resolveKeepers(none).count() == 0)
+    assert(Dedup.resolveKeepersBy(none, Seq.empty[(Long, Long)].toDF("doc_id", "prio"))
+      .count() == 0)
+  }
+
+  test("one Spark action per propagation round: the round's own localCheckpoint") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // listener events arrive asynchronously, some possibly from earlier
+    // tests: count only queries created after this point
+    @volatile var since = Long.MaxValue
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.id > since) actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        if (qe.id > since) actions.add(s"failed $funcName")
+    }
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 13L))
+      .toDF("a", "b")
+    spark.listenerManager.register(listener)
+    try {
+      since = spark.range(1).queryExecution.id
+      Dedup.resolveKeepers(pairs).collect()
+      // events arrive in order: once the collect is seen, the resolve's are in
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!actions.contains("collect") && System.nanoTime() < deadline) Thread.sleep(20)
+      // the chain 10-11-12-13 changes labels in rounds 1-3; round 4 sees none
+      assert(actions.toArray.toSeq == Seq.fill(4)("localCheckpoint") :+ "collect")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("band-pair simhash candidates: full recall of hamming <= 6 vs brute-force all-pairs") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -127,4 +127,66 @@ class PropertySpec extends SparkSpec {
         s"fused=${r.getSeq[String](0)} builtin=${r.getSeq[String](1)}")
     }
   }
+
+  /** Disjoint cliques, stars and chains (up to 12 hops) over shuffled doc
+    * ids, with duplicate and reversed pairs; plus a priority table with
+    * ties that leaves some doc ids out.
+    */
+  private val pairGraphGen: SGen[(List[(Long, Long)], Map[Long, Long])] = {
+    val shape: SGen[List[(Int, Int)]] = SGen.oneOf(
+      SGen.choose(2, 5).map(n => (for { i <- 0 until n; j <- i + 1 until n } yield (i, j)).toList),
+      SGen.choose(2, 8).map(n => (1 until n).map(i => (0, i)).toList),
+      SGen.choose(1, 12).map(hops => (0 until hops).map(i => (i, i + 1)).toList))
+    for {
+      shapes <- SGen.choose(1, 5).flatMap(SGen.listOfN(_, shape))
+      shuffleSeed <- SGen.long
+      flips <- SGen.infiniteLazyList(SGen.choose(0, 5))
+      prios <- SGen.infiniteLazyList(SGen.frequency(1 -> SGen.const(None),
+        4 -> SGen.choose(-1L, 2L).map(Some(_))))
+    } yield {
+      val sizes = shapes.map(_.flatMap { case (i, j) => Seq(i, j) }.max + 1)
+      val ids = new scala.util.Random(shuffleSeed).shuffle((1L to 3L * sizes.sum).toList)
+      val offsets = sizes.scanLeft(0)(_ + _)
+      val edges = shapes.zip(offsets).flatMap { case (es, off) =>
+        es.map { case (i, j) => (ids(off + i), ids(off + j)) } }
+      // flip 0: reversed; flip 1: duplicated; else as is
+      val pairs = edges.zip(flips).flatMap {
+        case ((a, b), 0) => Seq((b, a))
+        case (e, 1) => Seq(e, e)
+        case (e, _) => Seq(e)
+      }
+      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      (pairs, nodes.zip(prios).collect { case (x, Some(p)) => x -> p }.toMap)
+    }
+  }
+
+  /** Driver-side union-find: each component keeps its lowest (rank, id). */
+  private def unionFindKeepers(pairs: Seq[(Long, Long)], rank: Long => Long): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val root = find(p); parent(x) = root; root }
+    }
+    pairs.foreach { case (x, y) => val (rx, ry) = (find(x), find(y)); if (rx != ry) parent(rx) = ry }
+    parent.keys.toList.groupBy(find).values.flatMap { members =>
+      val keeper = members.minBy(x => (rank(x), x))
+      members.map(_ -> keeper)
+    }.toMap
+  }
+
+  test("resolveKeepers / resolveKeepersBy ≡ driver-side union-find on pair graphs") {
+    import graft.dedup.Dedup
+    val s = spark
+    import s.implicits._
+    def keepers(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    samples(pairGraphGen, 8).foreach { case (pairs, prio) =>
+      val df = pairs.toDF("a", "b")
+      assert(keepers(Dedup.resolveKeepers(df)) == unionFindKeepers(pairs, _ => 0L),
+        s"lowest-id keepers differ on $pairs")
+      assert(keepers(Dedup.resolveKeepersBy(df, prio.toSeq.toDF("doc_id", "prio"))) ==
+        unionFindKeepers(pairs, x => -prio.getOrElse(x, 0L)),
+        s"priority keepers differ on $pairs with $prio")
+    }
+  }
 }

@@ -4,13 +4,25 @@ import graft.checkpoint.Sinks
 import graft.operators.{Parse, TxnStamp}
 import graft.sources.Transcripts
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Resumable fan-out sink (FIXTURES.md F11) + salted stamping parity (F04). */
 class SinksSpec extends SparkSpec {
 
   private def routedSf001 =
     Pipeline.routedFromEvents(spark, "/root/testdata/sf0.001")
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `_manifests/` holds only committed `bucket-<n>.json` files, each a
+    * whole JSON object (no temp file or truncated manifest left behind).
+    */
+  private def assertManifestsWhole(outDir: String): Unit =
+    Files.list(Paths.get(outDir, "_manifests")).iterator.asScala.foreach { p =>
+      assert(p.getFileName.toString.matches("bucket-\\d+\\.json"), s"stray manifest entry $p")
+      assert(json.readTree(p.toFile).isObject, s"$p does not parse as a JSON object")
+    }
 
   test("fan-out write + resume equals single run (F11)") {
     val tmpA = Files.createTempDirectory("graft-single").toString
@@ -19,6 +31,7 @@ class SinksSpec extends SparkSpec {
 
     // single run
     assert(Sinks.writeResumable(routed, tmpA, nBuckets = 8, source = "sf0.001") == 8)
+    assertManifestsWhole(tmpA)
 
     // interrupted run: only buckets 0-2 get committed (simulated by
     // pre-marking 3..7 done, writing, then clearing the fake manifests)
@@ -26,12 +39,15 @@ class SinksSpec extends SparkSpec {
     Files.createDirectories(mdir)
     (3 until 8).foreach(b => Files.writeString(mdir.resolve(s"bucket-$b.json"), "{}"))
     assert(Sinks.writeResumable(routed, tmpB, 8, "sf0.001") == 3)
+    assertManifestsWhole(tmpB)
     (3 until 8).foreach(b => Files.delete(mdir.resolve(s"bucket-$b.json")))
 
     // resume: completes exactly the missing 5 buckets
     assert(Sinks.writeResumable(routed, tmpB, 8, "sf0.001") == 5)
+    assertManifestsWhole(tmpB)
     // idempotent: nothing left
     assert(Sinks.writeResumable(routed, tmpB, 8, "sf0.001") == 0)
+    assertManifestsWhole(tmpB)
 
     // resumed output == single-run output (per-sink counts and full rows)
     val a = Sinks.committedSinkCounts(spark, tmpA).collect()
@@ -51,6 +67,15 @@ class SinksSpec extends SparkSpec {
     // manifests carry lineage + counts
     val manifest = Files.readString(java.nio.file.Paths.get(tmpA, "_manifests", "bucket-0.json"))
     assert(manifest.contains("\"source\": \"sf0.001\"") && manifest.contains("n_routed"))
+  }
+
+  test("manifest source field is JSON-escaped: quotes and backslashes round-trip") {
+    val out = Files.createTempDirectory("graft-escaped").toString
+    val source = "s3a://bucket/\"quoted\" dir\\sub\\ <&>\tend"
+    assert(Sinks.writeResumable(routedSf001, out, nBuckets = 2, source = source) == 2)
+    val manifest = json.readTree(Paths.get(out, "_manifests", "bucket-0.json").toFile)
+    assert(manifest.get("source").asText == source)
+    assert(manifest.get("bucket").asInt == 0)
   }
 
   test("salted stamping equals plain window stamping, incl. a hot conversation (F04)") {
