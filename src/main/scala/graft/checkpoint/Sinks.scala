@@ -2,8 +2,9 @@ package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Fan-out sink + snapshot/manifest checkpointing.
   *
@@ -33,14 +34,28 @@ object Sinks {
 
   private def manifestDir(outDir: String) = Paths.get(outDir, "_manifests")
 
+  private val ManifestName = "bucket-(\\d+)\\.json".r
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Buckets whose manifest is committed: `bucket-<b>.json` that parses to
+    * a JSON object whose `bucket` is `b`. A truncated, foreign or empty
+    * manifest does not count (its bucket is redone), nor does any other
+    * entry of the manifest dir.
+    */
   def completedBuckets(outDir: String): Set[Int] = {
     val dir = manifestDir(outDir)
+    def committed(p: Path, b: Int): Boolean =
+      try {
+        val n = json.readTree(p.toFile).path("bucket")
+        n.isIntegralNumber && n.asLong == b
+      } catch { case _: java.io.IOException => false }
     if (!Files.isDirectory(dir)) Set.empty
-    else Files.list(dir).iterator.asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("bucket-") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("bucket-").stripSuffix(".json").toInt)
-      .toSet
+    else Using.resource(Files.list(dir))(_.iterator.asScala.flatMap { p =>
+      p.getFileName.toString match {
+        case ManifestName(n) => n.toIntOption.filter(committed(p, _))
+        case _ => None
+      }
+    }.toSet)
   }
 
   /** Write (only) the pending buckets of the routed stream, then commit one

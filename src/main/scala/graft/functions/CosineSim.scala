@@ -33,9 +33,19 @@ case class CosineSim(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSim.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSim =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSim {
+  val Name = "graft_cosine"
+
+  /** The cosine of two non-null arrays: a boxed double, or null. */
+  def eval(x: ArrayData, y: ArrayData): Any = {
     val n = x.numElements()
     if (y.numElements() != n) return null
     var dab = 0.0
@@ -56,14 +66,6 @@ case class CosineSim(left: Expression, right: Expression)
     }
     dab / (math.sqrt(daa) * math.sqrt(dbb))
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  val Name = "graft_cosine"
 
   /** Column API, self-contained (ADVICE r03: the registry-routed form made
     * external callers fail analysis unless the name had been registered

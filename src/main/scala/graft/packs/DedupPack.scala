@@ -243,8 +243,10 @@ object DedupPack extends QueryPack {
 
     // Exact connected-component minimum via recursive transitive closure:
     // reach(x, r) = "r reachable from x"; min(r) per x = the component min
-    // — the same fixed point Dedup.resolveKeepers converges to (the Spark
-    // side iterates min-label propagation until no label changes).
+    // — the same component minimum Dedup.resolveKeepers returns (the Spark
+    // side propagates min labels until no label changes, finishing by
+    // union-find on the driver after one round for graphs within its edge
+    // budget).
     "dedup_resolve" ->
       s"""${duckMinhashCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
           ${duckCapped(Dedup.DefaultMaxBucket)}, $duckCand,

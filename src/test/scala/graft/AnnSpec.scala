@@ -1,6 +1,7 @@
 package graft
 
 import graft.ann.Similarity
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN operator checks beyond the DuckDB oracles: centroid training
@@ -51,6 +52,103 @@ class AnnSpec extends SparkSpec {
     assert(c3.length == 4)
     // integer-sum fixed-point components: non-degenerate vectors
     assert(c1.values.forall(v => v.exists(_ != 0.0)))
+  }
+
+  /** The Spark formulation of [[Similarity.trainCentroids]]'s Lloyd steps
+    * (a broadcast one-row codebook, `array_max` argmax over
+    * (score, -cent_id), per-component `sum(cast(round(x * 1e6) as long))`,
+    * left join to the seeds) — the reference the driver loop must match bit
+    * for bit.
+    */
+  private def sparkTrainCentroids(emb: DataFrame, k: Int, iters: Int = 1,
+      sampleN: Int = 4096): DataFrame = {
+    val sample = emb
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("emb"),
+        md5(col("vec_id").cast("string")).as("h"))
+      .orderBy(col("h"), col("vec_id"))
+      .limit(sampleN)
+      .withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy(col("h"), col("vec_id"))))
+    val seeds = sample.filter(col("rk") <= k)
+      .select((col("rk") - 1).cast("long").as("cent_id"), col("emb").as("cent_emb"))
+    var cents = seeds
+    (1 to iters).foreach { _ =>
+      val centArr = cents.agg(
+        array_sort(collect_list(struct(col("cent_id"), col("cent_emb")))).as("cent_arr"))
+      val best = array_max(transform(col("cent_arr"), c =>
+        struct(Similarity.cosine(col("emb"), c.getField("cent_emb")).as("s"),
+          (-c.getField("cent_id")).as("negid"))))
+      val assigned = sample.join(broadcast(centArr))
+        .select(col("vec_id"), col("emb"), (-best.getField("negid")).as("cent_id"))
+      val rebuilt = assigned
+        .select(col("cent_id"), posexplode(col("emb")).as(Seq("p", "x")))
+        .groupBy("cent_id", "p")
+        .agg(sum(round(col("x") * 1e6).cast("long")).as("s"))
+        .groupBy("cent_id")
+        .agg(transform(array_sort(collect_list(struct(col("p"), col("s")))),
+          e => e.getField("s").cast("double")).as("rebuilt_emb"))
+      cents = seeds.select(col("cent_id"), col("cent_emb").as("seed_emb"))
+        .join(rebuilt, Seq("cent_id"), "left")
+        .select(col("cent_id"),
+          coalesce(col("rebuilt_emb"), col("seed_emb")).as("cent_emb"))
+    }
+    cents
+  }
+
+  /** Codebook rows by cent_id, components as raw IEEE bits (None = null). */
+  private def bits(cents: DataFrame): Seq[(Long, Option[List[Option[Long]]])] =
+    cents.collect().toSeq.map(r => r.getLong(0) ->
+      Option(r.getSeq[java.lang.Double](1)).map(_.toList.map(x =>
+        Option(x).map(d => java.lang.Double.doubleToRawLongBits(d)))))
+      .sortBy(_._1)
+
+  test("driver k-means training ≡ the Spark Lloyd-step formulation, bit for bit") {
+    for (sf <- Seq("sf0.001", "sf0.01"); k <- Seq(1, 8, 16)) {
+      val e = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
+      assert(bits(Similarity.trainCentroids(e, k)) == bits(sparkTrainCentroids(e, k)),
+        s"$sf k=$k")
+    }
+    // several Lloyd steps over a sample cut below the corpus size
+    assert(bits(Similarity.trainCentroids(emb, 8, iters = 3, sampleN = 50)) ==
+      bits(sparkTrainCentroids(emb, 8, iters = 3, sampleN = 50)))
+  }
+
+  test("driver k-means training ≡ the Spark formulation on degenerate vectors") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def v(xs: java.lang.Float*): Seq[java.lang.Float] = xs
+    val rows = Seq(
+      Row(1L, v(1f, 0f, 0f)), Row(2L, v(1f, 0f, 0f)), // identical seeds: one cluster empties
+      Row(3L, v(0f, 0f, 0f)), // zero vector: NaN cosine with every centroid
+      Row(4L, null), // null embedding
+      Row(5L, v(1f, null, 2f)), // null element
+      Row(6L, v(1f, 2f)), // shorter vector: null cosine
+      Row(7L, v(0.5078125f, -0.5078125f, 0.0390625f)), // x * 1e6 = ±507812.5, 39062.5: HALF_UP
+      Row(8L, v(0.3f, 0.9f, 0.1f)), Row(9L, v(-0.7f, 0.2f, 0.4f)))
+    // non-finite components: round passes them through, then the long cast
+    // saturates (NaN to 0) with ANSI off and fails with ANSI on
+    val nonFinite = Seq(Row(10L, v(Float.NaN, 1f, 0f)),
+      Row(11L, v(Float.PositiveInfinity, Float.NegativeInfinity, 1f)))
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def frame(rs: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+    def sameCentroids(rs: Seq[Row]): Unit = for (k <- Seq(2, 5, 20); iters <- Seq(1, 2)) {
+      val driver = bits(Similarity.trainCentroids(frame(rs), k, iters))
+      assert(driver == bits(sparkTrainCentroids(frame(rs), k, iters)), s"k=$k iters=$iters")
+      assert(driver.length == math.min(k, rs.length))
+    }
+    sameCentroids(rows)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      sameCentroids(rows ++ nonFinite)
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      def arithmetic(t: Throwable) =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+      assert(arithmetic(intercept[Exception](Similarity.trainCentroids(frame(rows ++ nonFinite), 2))))
+      assert(arithmetic(intercept[Exception](
+        sparkTrainCentroids(frame(rows ++ nonFinite), 2).collect())))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("trained IVF balances inverted lists vs the r01 first-K placeholder") {

@@ -7,10 +7,10 @@ import graft.dedup.Dedup
   */
 class DedupSpec extends SparkSpec {
 
-  private def resolve(pairs: Seq[(Long, Long)], maxIters: Int = 50): Map[Long, Long] = {
+  private def resolve(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val s = spark
     import s.implicits._
-    Dedup.resolveKeepers(pairs.toDF("a", "b"), maxIters)
+    Dedup.resolveKeepers(pairs.toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -55,6 +55,24 @@ class DedupSpec extends SparkSpec {
     got.values.toSet.foreach { (k: Long) => assert(got(k) == k) }
   }
 
+  test("a doc with several priority rows takes its highest, on both resolve paths") {
+    val s = spark
+    import s.implicits._
+    // the best row of docs 3 (a pair's a end) and 4 (a pair's b end) sits
+    // between two worse ones, so it is neither the first nor the last row
+    // the join emits for that doc
+    val pairs = Seq((3L, 1L), (3L, 2L), (0L, 4L)).toDF("a", "b")
+    val prio = Seq((3L, 1L), (3L, 9L), (3L, 0L), (1L, 5L),
+      (4L, 1L), (4L, 9L), (4L, 0L), (0L, 5L)).toDF("doc_id", "prio")
+    def keepers(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 0L -> 4L, 4L -> 4L)
+    assert(keepers(Dedup.resolveKeepersBy(pairs, prio)) == want)
+    // driver finish after round 1, and the distributed fixed point
+    for (budget <- Seq(Long.MaxValue, 0L))
+      assert(keepers(Dedup.resolve(pairs, Some(prio), maxIters = 50, driverEdges = budget)) == want)
+  }
+
   test("empty pair input resolves to zero rows") {
     val s = spark
     import s.implicits._
@@ -64,7 +82,10 @@ class DedupSpec extends SparkSpec {
       .count() == 0)
   }
 
-  test("one Spark action per propagation round: the round's own localCheckpoint") {
+  /** The Spark actions `run` performs on the clique+chain graph, in order,
+    * up to and including its `collects`-th `collect`.
+    */
+  private def actionsOf(collects: Int)(run: org.apache.spark.sql.DataFrame => Unit): Seq[String] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -84,13 +105,25 @@ class DedupSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       since = spark.range(1).queryExecution.id
-      Dedup.resolveKeepers(pairs).collect()
-      // events arrive in order: once the collect is seen, the resolve's are in
+      run(pairs)
+      // events arrive in order: once the last collect is seen, the resolve's are in
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!actions.contains("collect") && System.nanoTime() < deadline) Thread.sleep(20)
-      // the chain 10-11-12-13 changes labels in rounds 1-3; round 4 sees none
-      assert(actions.toArray.toSeq == Seq.fill(4)("localCheckpoint") :+ "collect")
+      while (actions.toArray.count(_ == "collect") < collects &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      actions.toArray.toSeq.map(_.toString)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("one Spark action per propagation round: the round's own localCheckpoint") {
+    val actions = actionsOf(1)(pairs =>
+      Dedup.resolve(pairs, None, maxIters = 50, driverEdges = 0).collect())
+    // the chain 10-11-12-13 changes labels in rounds 1-3; round 4 sees none
+    assert(actions == Seq.fill(4)("localCheckpoint") :+ "collect")
+  }
+
+  test("a graph within the edge budget finishes on the driver after round 1: one checkpoint, one collect") {
+    val actions = actionsOf(2)(pairs => Dedup.resolveKeepers(pairs).collect())
+    assert(actions == Seq("localCheckpoint", "collect", "collect"))
   }
 
   test("band-pair simhash candidates: full recall of hamming <= 6 vs brute-force all-pairs") {
@@ -113,8 +146,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("maxIters too small for the diameter fails loudly, never silently partial") {
-    val chain = (1L to 10L).map(i => (i, i + 1))
-    val e = intercept[IllegalArgumentException](resolve(chain, maxIters = 2))
+    val s = spark
+    import s.implicits._
+    val chain = (1L to 10L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](
+      Dedup.resolve(chain, None, maxIters = 2, driverEdges = 0).collect())
     assert(e.getMessage.contains("did not converge"))
   }
 }

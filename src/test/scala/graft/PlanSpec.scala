@@ -108,10 +108,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF training samples via distributed top-N, never a global corpus sort (VERDICT r03 #7)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = graft.ann.Similarity.trainCentroids(emb, 16)
-    cents.collect() // materialize so AQE finalizes the physical plan
-    val p = plan(cents)
+    // training returns a local codebook: its one Spark query is the sample,
+    // whose executed plan is captured when it finishes (listener events
+    // arrive asynchronously; only queries created after `since` count)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    @volatile var since = Long.MaxValue
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.id > since) plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val p = try {
+      since = spark.range(1).queryExecution.id
+      graft.ann.Similarity.trainCentroids(emb, 16)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      plans.peek()
+    } finally spark.listenerManager.unregister(listener)
+    assert(p != null, "no Spark query seen while training")
     // orderBy(h).limit(sampleN) must plan as TakeOrderedAndProject — a
     // distributed per-partition top-N + driver merge of sampleN rows. A
     // regression to orderBy-without-limit would GLOBAL-sort the corpus
@@ -119,9 +137,8 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"),
       s"sample must plan as distributed top-N:\n$p")
     // No global sort anywhere in training: SortExec prints as
-    // "Sort [keys], <global>, 0" — the row_number windows sort locally
-    // (global=false) AFTER the ≤sampleN cut; a global=true sort means the
-    // full corpus is being range-exchanged.
+    // "Sort [keys], <global>, 0"; a global=true sort means the full corpus
+    // is being range-exchanged.
     val globalSorts = "Sort \\[[^\\]]*\\], true".r.findAllIn(p).toList
     assert(globalSorts.isEmpty, s"global sort in training plan:\n$p")
   }

@@ -130,9 +130,9 @@ class PropertySpec extends SparkSpec {
 
   /** Disjoint cliques, stars and chains (up to 12 hops) over shuffled doc
     * ids, with duplicate and reversed pairs; plus a priority table with
-    * ties that leaves some doc ids out.
+    * ties that leaves some doc ids out and gives some two rows.
     */
-  private val pairGraphGen: SGen[(List[(Long, Long)], Map[Long, Long])] = {
+  private val pairGraphGen: SGen[(List[(Long, Long)], List[(Long, Long)])] = {
     val shape: SGen[List[(Int, Int)]] = SGen.oneOf(
       SGen.choose(2, 5).map(n => (for { i <- 0 until n; j <- i + 1 until n } yield (i, j)).toList),
       SGen.choose(2, 8).map(n => (1 until n).map(i => (0, i)).toList),
@@ -141,8 +141,8 @@ class PropertySpec extends SparkSpec {
       shapes <- SGen.choose(1, 5).flatMap(SGen.listOfN(_, shape))
       shuffleSeed <- SGen.long
       flips <- SGen.infiniteLazyList(SGen.choose(0, 5))
-      prios <- SGen.infiniteLazyList(SGen.frequency(1 -> SGen.const(None),
-        4 -> SGen.choose(-1L, 2L).map(Some(_))))
+      prios <- SGen.infiniteLazyList(SGen.frequency(1 -> SGen.const(Nil),
+        3 -> SGen.choose(-1L, 2L).map(List(_)), 1 -> SGen.listOfN(2, SGen.choose(-1L, 2L))))
     } yield {
       val sizes = shapes.map(_.flatMap { case (i, j) => Seq(i, j) }.max + 1)
       val ids = new scala.util.Random(shuffleSeed).shuffle((1L to 3L * sizes.sum).toList)
@@ -156,7 +156,7 @@ class PropertySpec extends SparkSpec {
         case (e, _) => Seq(e)
       }
       val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-      (pairs, nodes.zip(prios).collect { case (x, Some(p)) => x -> p }.toMap)
+      (pairs, nodes.zip(prios).flatMap { case (x, ps) => ps.map(x -> _) })
     }
   }
 
@@ -180,13 +180,24 @@ class PropertySpec extends SparkSpec {
     import s.implicits._
     def keepers(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    samples(pairGraphGen, 8).foreach { case (pairs, prio) =>
+    samples(pairGraphGen, 8).foreach { case (pairs, prioRows) =>
       val df = pairs.toDF("a", "b")
-      assert(keepers(Dedup.resolveKeepers(df)) == unionFindKeepers(pairs, _ => 0L),
-        s"lowest-id keepers differ on $pairs")
-      assert(keepers(Dedup.resolveKeepersBy(df, prio.toSeq.toDF("doc_id", "prio"))) ==
-        unionFindKeepers(pairs, x => -prio.getOrElse(x, 0L)),
-        s"priority keepers differ on $pairs with $prio")
+      val prioDf = prioRows.toDF("doc_id", "prio")
+      // a doc with several priority rows takes its highest
+      val prio = prioRows.groupMapReduce(_._1)(_._2)(math.max)
+      val byId = unionFindKeepers(pairs, _ => 0L)
+      val byPrio = unionFindKeepers(pairs, x => -prio.getOrElse(x, 0L))
+      assert(keepers(Dedup.resolveKeepers(df)) == byId, s"lowest-id keepers differ on $pairs")
+      assert(keepers(Dedup.resolveKeepersBy(df, prioDf)) == byPrio,
+        s"priority keepers differ on $pairs with $prioRows")
+      // both execution paths, whatever the edge budget picks: the driver
+      // finish after round 1, and the distributed fixed point
+      Seq("driver" -> Long.MaxValue, "distributed" -> 0L).foreach { case (name, budget) =>
+        assert(keepers(Dedup.resolve(df, None, 50, budget)) == byId,
+          s"$name lowest-id keepers differ on $pairs")
+        assert(keepers(Dedup.resolve(df, Some(prioDf), 50, budget)) == byPrio,
+          s"$name priority keepers differ on $pairs with $prioRows")
+      }
     }
   }
 }

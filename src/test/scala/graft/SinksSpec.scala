@@ -37,7 +37,8 @@ class SinksSpec extends SparkSpec {
     // pre-marking 3..7 done, writing, then clearing the fake manifests)
     val mdir = java.nio.file.Paths.get(tmpB, "_manifests")
     Files.createDirectories(mdir)
-    (3 until 8).foreach(b => Files.writeString(mdir.resolve(s"bucket-$b.json"), "{}"))
+    (3 until 8).foreach(b =>
+      Files.writeString(mdir.resolve(s"bucket-$b.json"), s"""{"bucket": $b}"""))
     assert(Sinks.writeResumable(routed, tmpB, 8, "sf0.001") == 3)
     assertManifestsWhole(tmpB)
     (3 until 8).foreach(b => Files.delete(mdir.resolve(s"bucket-$b.json")))
@@ -76,6 +77,32 @@ class SinksSpec extends SparkSpec {
     val manifest = json.readTree(Paths.get(out, "_manifests", "bucket-0.json").toFile)
     assert(manifest.get("source").asText == source)
     assert(manifest.get("bucket").asInt == 0)
+  }
+
+  test("resume redoes a bucket whose manifest is truncated, empty or foreign; ignores stray names") {
+    val single = Files.createTempDirectory("graft-single").toString
+    val resumed = Files.createTempDirectory("graft-damaged").toString
+    val routed = routedSf001
+    assert(Sinks.writeResumable(routed, single, nBuckets = 4, source = "sf0.001") == 4)
+    assert(Sinks.writeResumable(routed, resumed, nBuckets = 4, source = "sf0.001") == 4)
+    val mdir = Paths.get(resumed, "_manifests")
+    def manifest(b: Int) = mdir.resolve(s"bucket-$b.json")
+    // a crash that left half a manifest, an empty one, one naming another
+    // bucket, and entries whose names carry no bucket number
+    val whole = Files.readString(manifest(1))
+    Files.writeString(manifest(1), whole.take(whole.length / 2))
+    Files.writeString(manifest(2), "")
+    Files.writeString(manifest(3), """{"bucket": 0}""")
+    Files.writeString(mdir.resolve("bucket-x.json"), "{}")
+    Files.writeString(mdir.resolve("bucket-99999999999.json"), """{"bucket": 0}""")
+    assert(Sinks.completedBuckets(resumed) == Set(0))
+    assert(Sinks.writeResumable(routed, resumed, 4, "sf0.001") == 3)
+    assert(Sinks.completedBuckets(resumed) == Set(0, 1, 2, 3))
+    assert(json.readTree(manifest(1).toFile).get("bucket").asInt == 1)
+    def rows(dir: String) = spark.read.parquet(s"$dir/routed")
+      .select("conv_id", "turn_idx", "event_type", "row_repr", "text").collect()
+      .map(_.toString).sorted
+    assert(rows(single).sameElements(rows(resumed)))
   }
 
   test("salted stamping equals plain window stamping, incl. a hot conversation (F04)") {
