@@ -14,25 +14,16 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   *    partial top-k per partition via window after repartition by query.
   *    This is the correctness baseline and is how you'd score ≤ a few
   *    thousand queries against 10⁹ vectors on a cluster.
-  *  - [[lshBuckets]] / [[lshTopK]]: sign-random-projection LSH — each
-  *    vector is bucketed by the sign pattern of `nPlanes` deterministic
-  *    hyperplanes; candidates = same-bucket vectors only. The scale path:
-  *    the corpus-side shuffle is keyed by bucket, queries only meet
-  *    their bucket.
+  *  - [[lshBuckets]] / [[lshTopKMulti]]: sign-random-projection LSH —
+  *    each vector is bucketed by the sign pattern of `nPlanes`
+  *    deterministic hyperplanes; candidates = same-bucket vectors only.
+  *    The scale path: the corpus-side shuffle is keyed by bucket, queries
+  *    only meet their bucket.
   *
-  * Dot products use sequential double folds (aggregate over zip_with) so
-  * results are bit-reproducible and engine-portable.
+  * Cosines are sequential double folds ([[cosine]]) so results are
+  * bit-reproducible and engine-portable.
   */
 object Similarity {
-
-  /** Sequential-fold dot product of two double arrays (bit-deterministic).
-    * Kept as the reference formulation; the hot paths use the fused
-    * [[graft.functions.CosineSim]] expression with identical fold order.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine via the compiled [[graft.functions.CosineSim]] loop — HOF
     * lambdas evaluate interpreted per element (measured: ann_ivf_topk
@@ -91,8 +82,9 @@ object Similarity {
   def lshTopKMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
       nPlanes: Int = 4, nTables: Int = 8): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    // materialized once — referenced by the corpus side AND the broadcast
-    // query side (see cosineNearDup)
+    // narrow (vec_id, t, bucket) table materialized once: the corpus side
+    // AND the broadcast query side reference it, and each reference would
+    // otherwise re-run the nTables x nPlanes projection pass over the corpus
     val tabled = base.select(col("vec_id"),
       explode(array((0 until nTables).map(t =>
         struct(lit(t).as("t"),
@@ -122,25 +114,6 @@ object Similarity {
   def lshBuckets(emb: DataFrame, nPlanes: Int = 8): DataFrame =
     emb.select(col("vec_id"),
       lshBucket(asDouble(col("embedding")), nPlanes).as("bucket"))
-
-  /** Approximate top-k: exact cosine ranking restricted to the query's LSH
-    * bucket. Recall depends on nPlanes; candidates shrink ~2^nPlanes-fold.
-    */
-  def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, nPlanes: Int = 8): DataFrame = {
-    val bucketed = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("bucket", lshBucket(col("emb"), nPlanes))
-    val queries = broadcast(bucketed.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q"), col("emb").as("q_emb"), col("bucket")))
-    val scored = bucketed.join(queries, Seq("bucket"))
-      .filter(col("q") =!= col("vec_id"))
-      .select(col("q"), col("vec_id").as("neighbor"),
-        cosine(col("q_emb"), col("emb")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("neighbor"))
-  }
 
   /** Deterministic k-means training for the IVF coarse quantizer (VERDICT
     * r01 #8 — the r01 "first 16 vectors as centers" placeholder gives
@@ -330,40 +303,37 @@ object Similarity {
     * measured by `ann_neardup_recall`).
     *
     * Scale shape — the narrow-pair discipline of
-    * [[graft.dedup.Dedup.simhashCandidates]]: the bucketed self-join
-    * exchanges only (t, bucket, vec_id) triples, candidate (a, b) pairs
-    * are DISTINCT'd while still narrow, and the full embedding arrays are
-    * joined back only once per surviving candidate for the cosine verify.
-    * The corpus never self-cross-joins and never shuffles its payload
-    * into the quadratic stage (plan-asserted in PlanSpec).
-    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
+    * [[graft.dedup.Dedup.simhashCandidates]]: candidate (a, b) pairs are
+    * enumerated per (t, bucket) ([[graft.dedup.Dedup.bucketPairs]]), so
+    * only (t, bucket, vec_id) triples are exchanged, and are DISTINCT'd
+    * while still narrow; the full embedding arrays are joined back only
+    * once per surviving candidate for the cosine verify. The corpus never
+    * self-cross-joins and never shuffles its payload into the quadratic
+    * stage (plan-asserted in PlanSpec).
     */
   def cosineNearDup(emb: DataFrame, threshold: Double,
       nPlanes: Int = 4, nTables: Int = 16): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    // narrow (vec_id, t, bucket) assignment table materialized once: both
-    // self-join sides reference it, and the broadcast/build side would
-    // otherwise re-run the nTables x nPlanes projection pass over the
-    // corpus (same rationale as the simhash fingerprint materialization)
     val tabled = base.select(col("vec_id"),
       explode(array((0 until nTables).map(t =>
         struct(lit(t).as("t"),
           lshBucket(col("emb"), nPlanes, t * nPlanes).as("bucket"))): _*)).as("tb"))
       .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .localCheckpoint()
-    val l = tabled.select(col("t"), col("bucket"), col("vec_id").as("a"))
-    val r = tabled.select(col("t").as("t_r"), col("bucket").as("bucket_r"),
-      col("vec_id").as("b"))
-    val cand = l.join(r,
-        l("t") === r("t_r") && l("bucket") === r("bucket_r") && l("a") < r("b"))
-      .select("a", "b").distinct()
+    verified(graft.dedup.Dedup.bucketPairs(tabled, Seq("t", "bucket"), "vec_id"),
+      base, threshold)
+  }
+
+  /** The candidate pairs (a, b) whose embeddings in `base` (vec_id, emb)
+    * have cosine ≥ `threshold`: the embeddings are joined back once per
+    * distinct candidate.
+    */
+  private def verified(cand: DataFrame, base: DataFrame, threshold: Double): DataFrame =
     cand
       .join(base.select(col("vec_id").as("a"), col("emb").as("emb_a")), "a")
       .join(base.select(col("vec_id").as("b"), col("emb").as("emb_b")), "b")
       .select(col("a"), col("b"), cosine(col("emb_a"), col("emb_b")).as("sim"))
       .filter(col("sim") >= threshold)
       .select("a", "b")
-  }
 
   /** Norm-relative int8 scalar quantization: q[i] = round(127·x[i] / max|x|),
     * stored as `array<tinyint>` — 1 byte/element in Tungsten rows and
@@ -427,14 +397,14 @@ object Similarity {
     * Scale shape: probe assignment is ROW-LOCAL (the same broadcast-
     * codebook per-centroid score array as [[assignCentroids]], sliced to
     * the top `nProbe` — the corpus is never exchanged to find its
-    * clusters); the candidate self-join exchanges only narrow
+    * clusters); the per-cluster pair enumeration exchanges only narrow
     * (cent_id, vec_id) pairs (plan-asserted); embeddings join back once
     * per DISTINCT surviving candidate for the verify. At N vectors pick
     * nCentroids ∝ N/m for a target cluster size m, so per-cluster
     * quadratic work stays m²-bounded while assignment stays one broadcast.
     * Output: (a, b) pairs with cosine ≥ threshold sharing ≥ 1 probed
     * cluster, a < b.
-    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
+    * Runs its one training job ([[trainCentroids]]) when called.
     */
   def semDedupPairs(emb: DataFrame, threshold: Double,
       nCentroids: Int = 16, nProbe: Int = 2): DataFrame = {
@@ -447,24 +417,12 @@ object Similarity {
     val scored = transform(col("cent_arr"), c =>
       struct(cosine(col("emb"), c.getField("cent_emb")).as("s"),
         (-c.getField("cent_id")).as("negid")))
-    // narrow (cent_id, vec_id) probe-assignment table materialized once:
-    // both self-join sides reference it, and the build side would
-    // otherwise re-run the k-cosine row-local assignment over the corpus
     val probed = base.join(broadcast(centArr))
       .select(col("vec_id"),
         explode(slice(reverse(array_sort(scored)), 1, nProbe)).as("pc"))
       .select((-col("pc.negid")).as("cent_id"), col("vec_id"))
-      .localCheckpoint()
-    val l = probed.select(col("cent_id"), col("vec_id").as("a"))
-    val r = probed.select(col("cent_id").as("cent_id_r"), col("vec_id").as("b"))
-    val cand = l.join(r, l("cent_id") === r("cent_id_r") && l("a") < r("b"))
-      .select("a", "b").distinct()
-    cand
-      .join(base.select(col("vec_id").as("a"), col("emb").as("emb_a")), "a")
-      .join(base.select(col("vec_id").as("b"), col("emb").as("emb_b")), "b")
-      .select(col("a"), col("b"), cosine(col("emb_a"), col("emb_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select("a", "b")
+    verified(graft.dedup.Dedup.bucketPairs(probed, Seq("cent_id"), "vec_id"),
+      base, threshold)
   }
 
   /** Exact near-duplicate ground truth: ALL pairs with cosine ≥

@@ -1,9 +1,9 @@
 package graft.checkpoint
 
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.Using
 
 /** Fan-out sink + snapshot/manifest checkpointing.
@@ -32,7 +32,19 @@ object Sinks {
   def withBucket(routed: DataFrame, nBuckets: Int): DataFrame =
     routed.withColumn(BucketCol, pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
 
-  private def manifestDir(outDir: String) = Paths.get(outDir, "_manifests")
+  /** `outDir`/_manifests and the Hadoop filesystem of its URI, so that
+    * manifests sit next to the data on any scheme the writer accepts. On
+    * a checksummed filesystem (the local one) the raw filesystem beneath
+    * it is used: a manifest is validated by parsing, and a `.crc` sidecar
+    * per manifest would only be one more file to keep in step.
+    */
+  private def manifestDir(outDir: String): (FileSystem, Path) = {
+    val dir = new Path(outDir, "_manifests")
+    dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration) match {
+      case fs: ChecksumFileSystem => (fs.getRawFileSystem, dir)
+      case fs => (fs, dir)
+    }
+  }
 
   private val ManifestName = "bucket-(\\d+)\\.json".r
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -43,19 +55,19 @@ object Sinks {
     * entry of the manifest dir.
     */
   def completedBuckets(outDir: String): Set[Int] = {
-    val dir = manifestDir(outDir)
+    val (fs, dir) = manifestDir(outDir)
     def committed(p: Path, b: Int): Boolean =
       try {
-        val n = json.readTree(p.toFile).path("bucket")
+        val n = Using.resource(fs.open(p))(json.readTree(_)).path("bucket")
         n.isIntegralNumber && n.asLong == b
       } catch { case _: java.io.IOException => false }
-    if (!Files.isDirectory(dir)) Set.empty
-    else Using.resource(Files.list(dir))(_.iterator.asScala.flatMap { p =>
-      p.getFileName.toString match {
-        case ManifestName(n) => n.toIntOption.filter(committed(p, _))
+    if (!fs.isDirectory(dir)) Set.empty
+    else fs.listStatus(dir).flatMap { st =>
+      st.getPath.getName match {
+        case ManifestName(n) => n.toIntOption.filter(committed(st.getPath, _))
         case _ => None
       }
-    }.toSet)
+    }.toSet
   }
 
   /** Write (only) the pending buckets of the routed stream, then commit one
@@ -114,7 +126,8 @@ object Sinks {
       }
     }
 
-    val dir = Files.createDirectories(manifestDir(outDir))
+    val (fs, dir) = manifestDir(outDir)
+    fs.mkdirs(dir)
     val src = graft.functions.CanonicalJson.escape(source)
     pending.foreach { b =>
       val (n, c, mn, mx) = stats(b)
@@ -125,9 +138,13 @@ object Sinks {
            | "min_pos": $mn,
            | "max_pos": $mx}""".stripMargin
       // commit by rename: a crash mid-write leaves only the temp name,
-      // which completedBuckets does not count, never a truncated manifest
-      val tmp = Files.writeString(dir.resolve(s".bucket-$b.json.tmp"), json)
-      Files.move(tmp, dir.resolve(s"bucket-$b.json"), StandardCopyOption.ATOMIC_MOVE)
+      // which completedBuckets does not count, never a truncated manifest.
+      // Hadoop's rename does not replace an existing file, so a stale one
+      // is deleted first; a crash in that gap leaves the bucket pending.
+      val (tmp, dst) = (new Path(dir, s".bucket-$b.json.tmp"), new Path(dir, s"bucket-$b.json"))
+      Using.resource(fs.create(tmp, true))(_.write(json.getBytes(UTF_8)))
+      fs.delete(dst, false)
+      if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"cannot commit manifest $dst")
     }
     pending.size
   }

@@ -9,10 +9,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale design: nothing here is O(n²) over the corpus. Exact dedup is one
   * hash aggregation; MinHash/SimHash candidate generation is
-  * explode-by-band + equi-self-join on the band bucket (shuffle keyed by
-  * band hash, so only colliding docs ever meet), and the verify step runs
-  * per candidate pair. At 100 TB the band join is the dominant shuffle and
-  * is bounded by bucket sizes, not corpus size.
+  * explode-by-band + per-bucket pair enumeration ([[bucketPairs]]: one
+  * shuffle keyed by the band bucket, so only colliding docs ever meet),
+  * and the verify step runs per candidate pair. At 100 TB the bucket
+  * shuffle is the dominant one, and the pair count is bounded by bucket
+  * sizes, not corpus size.
   *
   * All hashing is md5-derived integer arithmetic (engine-portable, exact):
   * h(s) = int(md5(s)[0:8], 16) ∈ [0, 2^32); permutations
@@ -80,7 +81,7 @@ object Dedup {
 
   /** Distinct candidate pairs (a < b) from shared LSH band buckets.
     *
-    * `maxBucket` caps the per-bucket membership BEFORE the self-join: a
+    * `maxBucket` caps the per-bucket membership before pairing: a
     * bucket of m docs yields m²/2 pairs, so one pathological bucket (a
     * corpus with millions of near-identical boilerplate docs) would go
     * quadratic at 100 TB (VERDICT r01). The cap keeps the `maxBucket`
@@ -90,32 +91,31 @@ object Dedup {
     * cluster while the pruned members are re-found through their OTHER
     * bands or transitively via the keeper. Uncapped (`Int.MaxValue`) is
     * the OPT-IN (graded by `dedup_minhash_pairs_uncapped`).
-    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
-  def minhashCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val bandsRaw = minhashBands(docs)
-    // Materialize the NARROW banded table once: the candidate self-join
-    // references it on BOTH sides, and the build side is a
-    // BroadcastExchange whose subtree re-executes — i.e. the whole
-    // shingle+MinHash md5 pass ran twice per query (AQE stage reuse only
-    // covers shuffle exchanges). Same narrow-intermediate materialization
-    // as the simhash fingerprint table; rows are (doc_id, band_idx,
-    // band_hash), bucket-capped, bounded well below the corpus payload.
-    val bands = (
-      if (maxBucket == Int.MaxValue) bandsRaw
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("band_idx", "band_hash").orderBy("doc_id")
-        bandsRaw.withColumn("bucket_rank", row_number().over(w))
-          .filter(col("bucket_rank") <= maxBucket)
-          .drop("bucket_rank")
-      }).localCheckpoint()
-    val l = bands.select(col("band_idx"), col("band_hash"), col("doc_id").as("a"))
-    val r = bands.select(col("band_idx").as("band_idx_r"),
-      col("band_hash").as("band_hash_r"), col("doc_id").as("b"))
-    l.join(r, l("band_idx") === r("band_idx_r") &&
-        l("band_hash") === r("band_hash_r") && l("a") < r("b"))
-      .select("a", "b").distinct()
+  def minhashCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
+    bucketPairs(minhashBands(docs), Seq("band_idx", "band_hash"), "doc_id", maxBucket)
+
+  /** Distinct pairs (a, b), a < b, of the `id` values that share a bucket
+    * of `table` — a row of the `keys` columns, none of them null (a null
+    * key matches nothing, as in an equi-join). Each bucket's ids are
+    * collected and sorted, cut to the `cap` lowest, and every member is
+    * paired with the members after it: one shuffle keyed by the bucket, no
+    * join, and the table is read once, so it needs no materialization. A
+    * null id is in no pair.
+    *
+    * A bucket's member list is one row, so buckets must stay small — as
+    * their quadratic pair count already requires.
+    */
+  private[graft] def bucketPairs(table: DataFrame, keys: Seq[String], id: String,
+      cap: Int = Int.MaxValue): DataFrame = {
+    val sorted = array_sort(collect_list(col(id)))
+    table.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*)
+      .agg((if (cap == Int.MaxValue) sorted else slice(sorted, 1, cap)).as("ids"))
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a")))
+      .select(col("a"), explode(slice(col("ids"), col("i") + 2, size(col("ids")))).as("b"))
+      .filter(col("a") < col("b"))
+      .distinct()
   }
 
   /** Candidate pairs + exact shingle-set Jaccard as integer
@@ -136,7 +136,7 @@ object Dedup {
 
   /** SimHash candidate pairs (VERDICT r01 #9 — fingerprints alone are only
     * half a dedup operator): the 64-bit fingerprint is cut into 8 bands of
-    * 8 bits and keyed on band PAIRS — C(8,2) = 28 equi-join keys of 16
+    * 8 bits and keyed on band PAIRS — C(8,2) = 28 bucket keys of 16
     * bits each (block-combination indexing, the standard web-scale simhash
     * table layout). Near-duplicates at hamming ≤ 6 flip at most 6 bands,
     * leaving ≥ 2 clean, so some clean pair key matches (pigeonhole) — the
@@ -149,12 +149,12 @@ object Dedup {
     * duplicates; at 64 bits the same threshold verifies 80 (113× fewer
     * false positives). Why pair keys and not single bands: 8-bit bands
     * give only 256 buckets per band, so at corpus scale EVERY bucket
-    * holds n/256 docs and the candidate join is quadratic no matter how
+    * holds n/256 docs and the candidate stage is quadratic no matter how
     * clean the data; 16-bit pair keys are 256× finer at 3.5× more keys
     * (measured on the 5k-doc sf0.1 corpus: raw join tuples 5.0M → 1.2M,
     * distinct candidate pairs 4.02M → 848k, recall of true hamming ≤ 6
     * pairs 5840/5840).
-    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
+    * Runs one Spark job when called: the fingerprint table's `localCheckpoint`.
     */
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
     // Recall guarantee: hamming ≤ maxHamming flips at most maxHamming of
@@ -172,36 +172,30 @@ object Dedup {
     // Block-combination keys (the published web-scale simhash indexing
     // trick): key on PAIRS of 8-bit bands — C(8,2) = 28 keys of 16 bits
     // each. Single 8-bit bands give only 256 buckets per band, so at
-    // corpus scale every bucket holds n/256 docs and the candidate join
+    // corpus scale every bucket holds n/256 docs and the candidate stage
     // is quadratic regardless of data; 16-bit pair keys make buckets
     // 256× finer for 3.5× more keys, with the hamming ≤ 6 pigeonhole
     // guarantee intact (≥2 clean bands ⇒ their pair key matches).
     val combos = for { i <- 0 until 8; j <- (i + 1) until 8 } yield (i, j)
-    val banded = sh.select(col("doc_id"), col("sh64"),
+    val banded = sh.select(col("doc_id"),
       explode(array(combos.map { case (i, j) =>
         struct(lit(i * 8 + j).as("band"),
           (shiftright(col("sh64"), i * 8).bitwiseAND(lit(255L)) * lit(256L) +
             shiftright(col("sh64"), j * 8).bitwiseAND(lit(255L))).as("key"))
       }: _*)).as("bk"))
-      .select(col("doc_id"), col("sh64"), col("bk.band").as("band"), col("bk.key").as("key"))
-    // A near-identical corpus makes band buckets FAT: the raw equi-join
-    // yields millions of (a,b) tuples for thousands of distinct pairs
-    // (measured 2.9M → 24k on the 500-doc test corpus). So dedupe the
-    // NARROW (a,b) first, then broadcast the fingerprint table back for
-    // the hamming verify — never drag fingerprints through the candidate
-    // multiset's shuffle.
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a"))
-    val r = banded.select(col("band").as("band_r"), col("key").as("key_r"),
-      col("doc_id").as("b"))
-    val pairs = l.join(r, col("band") === col("band_r") && col("key") === col("key_r")
-        && col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    // no broadcast hint: at corpus scale the fingerprint table is huge and
-    // the CANDIDATE side is the small one — AQE picks the right side
-    val sh64 = sh
-    pairs
-      .join(sh64.select(col("doc_id").as("a"), col("sh64").as("sh_a")), "a")
-      .join(sh64.select(col("doc_id").as("b"), col("sh64").as("sh_b")), "b")
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    // A near-identical corpus makes band buckets FAT: they enumerate
+    // millions of (a,b) tuples for thousands of distinct pairs (measured
+    // 2.9M → 24k on the 500-doc test corpus). So dedupe the
+    // NARROW (a,b) first, then join the fingerprint table back for the
+    // hamming verify — never drag fingerprints through the candidate
+    // shuffle. A doc with a null fingerprint (null text) has null keys and
+    // so no candidate. No broadcast hint: at corpus scale the fingerprint
+    // table is huge and the CANDIDATE side is the small one — AQE picks
+    // the right side.
+    bucketPairs(banded, Seq("band", "key"), "doc_id")
+      .join(sh.select(col("doc_id").as("a"), col("sh64").as("sh_a")), "a")
+      .join(sh.select(col("doc_id").as("b"), col("sh64").as("sh_b")), "b")
       .select(col("a"), col("b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .withColumn("is_dup", (col("hamming") <= maxHamming).cast("int"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Aggregate stage — per-sink counts + the conservation ledger.
@@ -23,13 +23,13 @@ object Agg {
     routed.groupBy("role", "tool", "event_type")
       .agg(count(lit(1)).as("n"))
 
-  /** One-row conservation ledger over the enriched+stamped (pre-explode)
-    * frame. Invariant checked by tests:
-    * turns = row_events + query_kept + query_suppressed + commits + noise.
+  /** The conservation ledger's counters over the enriched+stamped
+    * (pre-explode) frame, one aggregate column each. Invariant checked by
+    * tests: turns = row_events + query_kept + query_suppressed + commits + noise.
     */
-  def reconcile(enriched: DataFrame): DataFrame = {
+  val Ledger: Seq[Column] = {
     val isRow = col("kind").isin("insert", "update", "delete")
-    enriched.agg(
+    Seq(
       count(lit(1)).as("turns"),
       sum(when(isRow, 1L).otherwise(0L)).as("row_events"),
       sum(when(col("kind") === "query" && !col("suppressed"), 1L).otherwise(0L)).as("query_kept"),
@@ -40,4 +40,7 @@ object Agg {
       sum(when(isRow && col("matched") && col("txn_id").isNull, 1L).otherwise(0L)).as("dropped_uncommitted"),
       sum(when(isRow && col("matched") && col("txn_id").isNotNull, size(col("vals"))).otherwise(0L)).as("routable_physical_rows"))
   }
+
+  /** One-row conservation ledger ([[Ledger]]) as a standalone aggregation. */
+  def reconcile(enriched: DataFrame): DataFrame = enriched.agg(Ledger.head, Ledger.tail: _*)
 }

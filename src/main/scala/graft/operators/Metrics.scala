@@ -13,17 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object Metrics {
 
+  /** Attaches the [[Agg.Ledger]] counters plus `quarantined_odd_updates`. */
   def observe(enriched: DataFrame, observation: Observation): DataFrame = {
-    val isRow = col("kind").isin("insert", "update", "delete")
-    enriched.observe(
-      observation,
-      count(lit(1)).as("turns"),
-      sum(when(isRow, 1L).otherwise(0L)).as("row_events"),
-      sum(when(col("kind") === "query" && col("suppressed"), 1L).otherwise(0L)).as("query_suppressed"),
-      sum(when(col("kind") === "", 1L).otherwise(0L)).as("noise"),
-      sum(when(isRow && !col("matched"), 1L).otherwise(0L)).as("dropped_unmapped"),
-      sum(when(isRow && col("matched") && col("txn_id").isNull, 1L).otherwise(0L)).as("dropped_uncommitted"),
-      sum(when(isRow && col("matched") && (size(col("vals")) % 2 === 1) &&
-        (col("kind") === "update"), 1L).otherwise(0L)).as("quarantined_odd_updates"))
+    val oddUpdates = sum(when(col("kind") === "update" && col("matched") &&
+      size(col("vals")) % 2 === 1, 1L).otherwise(0L)).as("quarantined_odd_updates")
+    enriched.observe(observation, oddUpdates, Agg.Ledger: _*)
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import graft.ann.Similarity
 import graft.dedup.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Keeper resolution over duplicate-pair graphs (the dedup decision step);
   * the candidate generators themselves are DuckDB-oracle-checked.
@@ -128,7 +131,12 @@ class DedupSpec extends SparkSpec {
 
   test("band-pair simhash candidates: full recall of hamming <= 6 vs brute-force all-pairs") {
     import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // two docs with null text have a null fingerprint, hence null band
+    // keys: they must pair with nothing, not with each other
+    val nullText = Seq(-1L, -2L)
+    val docs = corpus.unionByName(spark.range(1, 3).select((-col("id")).as("doc_id"),
+      lit(null).cast("string").as("text")), allowMissingColumns = true)
     val sh = Dedup.simhashDocs(docs)
     val a = sh.select(col("doc_id").as("a"), col("sh64").as("ha"))
     val b = sh.select(col("doc_id").as("b"), col("sh64").as("hb"))
@@ -136,6 +144,9 @@ class DedupSpec extends SparkSpec {
       .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= 6)
       .select("a", "b")
     val cand = Dedup.simhashCandidates(docs).select("a", "b")
+    assert(sh.filter(col("doc_id").isin(nullText: _*) && col("sh64").isNull).count() == 2)
+    assert(cand.filter(col("a").isin(nullText: _*) || col("b").isin(nullText: _*)).isEmpty,
+      "a doc with null text is in a candidate pair")
     assert(truth.count() > 0, "corpus should contain near-dup fingerprints")
     assert(truth.exceptAll(cand).isEmpty,
       "a true hamming<=6 pair escaped the C(8,2) band-pair index")
@@ -152,5 +163,69 @@ class DedupSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Dedup.resolve(chain, None, maxIters = 2, driverEdges = 0).collect())
     assert(e.getMessage.contains("did not converge"))
+  }
+
+  /** The candidate self-join that [[Dedup.bucketPairs]] replaced: cap each
+    * (k1, k2) bucket to its `cap` lowest ids with a row_number window, then
+    * equi-join the table with itself on the key with a < b. The window
+    * sorts a null id last, as the DuckDB oracle's ORDER BY does (Spark's
+    * default puts it first, where it took one of the cap's slots and
+    * paired with nothing).
+    */
+  private def selfJoinPairs(table: DataFrame, cap: Int): DataFrame = {
+    val capped =
+      if (cap == Int.MaxValue) table
+      else {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("k1", "k2").orderBy(col("id").asc_nulls_last)
+        table.withColumn("rk", row_number().over(w)).filter(col("rk") <= cap).drop("rk")
+      }
+    val l = capped.select(col("k1"), col("k2"), col("id").as("a"))
+    val r = capped.select(col("k1").as("k1_r"), col("k2").as("k2_r"), col("id").as("b"))
+    l.join(r, col("k1") === col("k1_r") && col("k2") === col("k2_r") && col("a") < col("b"))
+      .select("a", "b").distinct()
+  }
+
+  test("bucketPairs gives the self-join's pairs: duplicate ids, null keys and ids, caps") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k1", IntegerType), StructField("k2", StringType),
+      StructField("id", LongType)))
+    def table(rows: Seq[(Integer, String, java.lang.Long)]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(r => Row(r._1, r._2, r._3)): _*),
+        schema)
+    // bucket (1, x): 3, 1, 1, 2 and a null id; (1, null) and (null, x)
+    // would pair 1-2 and 1-5 were a null key a bucket; (2, y): 4 alone
+    val fixed = Seq[(Integer, String, java.lang.Long)]((1, "x", 3L), (1, "x", 1L),
+      (1, "x", 1L), (1, "x", null), (1, "x", 2L), (1, null, 1L), (1, null, 2L),
+      (null, "x", 1L), (null, "x", 5L), (2, "y", 4L), (2, "x", 7L), (2, "x", 5L))
+    val rnd = new scala.util.Random(7)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    val generated = (1 to 4).map(_ => Seq.fill[(Integer, String, java.lang.Long)](80)((
+      pick[Integer](0, 1, 2, null), pick("x", "y", null),
+      if (rnd.nextInt(10) == 0) null else java.lang.Long.valueOf(rnd.nextInt(24).toLong))))
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    for (rows <- fixed +: generated; cap <- Seq(1, 2, 3, 100, Int.MaxValue)) {
+      val t = table(rows)
+      val want = pairs(selfJoinPairs(t, cap))
+      assert(pairs(Dedup.bucketPairs(t, Seq("k1", "k2"), "id", cap)) == want, s"cap $cap: $rows")
+      if (cap >= 3) assert(want.nonEmpty)
+    }
+    assert(pairs(Dedup.bucketPairs(table(fixed), Seq("k1", "k2"), "id")) ==
+      Set(1L -> 2L, 1L -> 3L, 2L -> 3L, 5L -> 7L))
+    assert(pairs(Dedup.bucketPairs(table(fixed), Seq("k1", "k2"), "id", 2)) ==
+      Set(5L -> 7L), "cap 2 keeps ids 1, 1 of bucket (1, x): no pair")
+  }
+
+  test("candidate generators are lazy: no Spark action at the call but semDedupPairs' training") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    // each call is followed by one marker collect, which ends the capture
+    def atCall(collects: Int)(call: => DataFrame): Seq[String] =
+      actionsOf(collects)(_ => { call; spark.range(1).collect() })
+    assert(atCall(1)(Dedup.minhashCandidates(docs)) == Seq("collect"))
+    assert(atCall(1)(Similarity.cosineNearDup(emb, 0.25)) == Seq("collect"))
+    assert(atCall(2)(Similarity.semDedupPairs(emb, 0.25)) == Seq("collect", "collect"))
   }
 }

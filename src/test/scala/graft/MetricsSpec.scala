@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Metrics, Route}
+import graft.operators.{Agg, Metrics, Route}
 import graft.sources.Transcripts
 import org.apache.spark.sql.Observation
 
@@ -28,5 +28,29 @@ class MetricsSpec extends SparkSpec {
     assert(m("dropped_unmapped") == 1L)
     assert(m("dropped_uncommitted") == 1L)
     assert(m("quarantined_odd_updates") == 1L)
+  }
+
+  test("observed counters satisfy the conservation identity and equal the reconcile ledger") {
+    val turns = mkTurns(Seq(
+      ("c1", 1, "user", "EVENT insert rows=1 vals=[1|a|b]", "search"), // row event
+      ("c1", 2, "user", "EVENT query stmt=BEGIN", ""), // query, suppressed
+      ("c1", 3, "assistant", "EVENT query stmt=DROP TABLE x", ""), // query, kept
+      ("c1", 4, "user", "EVENT commit xid=5", "search"), // commit
+      ("c1", 5, "user", "just noise", ""), // noise
+      ("c2", 1, "user", "EVENT delete rows=1 vals=[2|c|d]", "zzz"), // row event
+      ("c2", 2, "user", "EVENT commit xid=6", "zzz"))) // commit
+    val obs = Observation("graft-ledger")
+    val enriched = Pipeline.enriched(turns, Transcripts.lookup(spark))
+    Route.messages(Metrics.observe(enriched, obs)).count()
+    val m = obs.get
+    def n(k: String): Long = m(k).asInstanceOf[Long]
+    assert(n("turns") == 7L)
+    assert(Seq("row_events", "query_kept", "query_suppressed", "commits", "noise")
+      .map(n) == Seq(2L, 1L, 1L, 2L, 1L))
+    assert(n("turns") == n("row_events") + n("query_kept") + n("query_suppressed") +
+      n("commits") + n("noise"))
+    // one column list: the observed ledger is the standalone aggregation's row
+    val ledger = Agg.reconcile(enriched).collect().head
+    ledger.schema.fieldNames.foreach(k => assert(n(k) == ledger.getAs[Long](k), k))
   }
 }

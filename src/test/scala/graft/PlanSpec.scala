@@ -12,6 +12,13 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Join nodes of `exec` with a join key that references column `name`. */
+  private def joinsKeyedOn(exec: org.apache.spark.sql.execution.SparkPlan, name: String) =
+    exec.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == name)) => j
+    }
+
   test("routed pipeline: exactly one hash exchange + one broadcast exchange") {
     val routed = Pipeline.routed(
       Transcripts.synthetic(spark, 10000, 100),
@@ -165,6 +172,7 @@ class PlanSpec extends SparkSpec {
       assert(!e.output.exists(_.dataType.typeName.startsWith("array")),
         s"embedding array in candidate shuffle: ${e.output}\n$exec")
     }
+    assert(joinsKeyedOn(exec, "bucket").isEmpty, s"bucket-keyed join:\n$exec")
   }
 
   test("semDedupPairs: row-local probe assignment, narrow cluster-keyed self-join") {
@@ -186,6 +194,7 @@ class PlanSpec extends SparkSpec {
       assert(!e.output.exists(_.dataType.typeName.startsWith("array")),
         s"embedding array in cluster-keyed candidate shuffle: ${e.output}\n$exec")
     }
+    assert(joinsKeyedOn(exec, "cent_id").isEmpty, s"cent_id-keyed join:\n$exec")
   }
 
   test("tfidf: ONE tokenize+aggregate scan serves both tf and df branches") {

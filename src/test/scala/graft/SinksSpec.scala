@@ -105,6 +105,17 @@ class SinksSpec extends SparkSpec {
     assert(rows(single).sameElements(rows(resumed)))
   }
 
+  test("manifests go through the output URI's filesystem: a file:// outDir resumes") {
+    val dir = Files.createTempDirectory("graft-uri")
+    val out = s"file://$dir"
+    assert(Sinks.writeResumable(routedSf001, out, nBuckets = 2, source = "sf0.001") == 2)
+    assert(Files.isRegularFile(dir.resolve("_manifests").resolve("bucket-0.json")) &&
+      Files.isRegularFile(dir.resolve("_manifests").resolve("bucket-1.json")))
+    assertManifestsWhole(dir.toString)
+    assert(Sinks.completedBuckets(out) == Set(0, 1))
+    assert(Sinks.writeResumable(routedSf001, out, 2, "sf0.001") == 0)
+  }
+
   test("salted stamping equals plain window stamping, incl. a hot conversation (F04)") {
     // 1 hot conversation with 500 turns + commits only near the end blocks
     val hot = (1 to 500).map { i =>
