@@ -74,23 +74,21 @@ object Similarity {
     * Scale shape: the per-table candidate join stays a bucketed equi-join
     * (queries broadcast); the corpus explodes only a NARROW
     * (vec_id, table, bucket) triple — embeddings are joined back
-    * per-candidate after the distinct, the same narrow-pair discipline as
-    * [[graft.dedup.Dedup.simhashCandidates]].
+    * per-candidate after the distinct, so they never enter the candidate
+    * stage. Catalyst pushes the query side's `isin(queryIds)` below its
+    * bucket projection (into the scan, for a parquet source), so the
+    * corpus side is the one full projection pass and nothing is
+    * materialized.
     * Output: (q, rank, neighbor).
-    * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def lshTopKMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
       nPlanes: Int = 4, nTables: Int = 8): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    // narrow (vec_id, t, bucket) table materialized once: the corpus side
-    // AND the broadcast query side reference it, and each reference would
-    // otherwise re-run the nTables x nPlanes projection pass over the corpus
     val tabled = base.select(col("vec_id"),
       explode(array((0 until nTables).map(t =>
         struct(lit(t).as("t"),
           lshBucket(col("emb"), nPlanes, t * nPlanes).as("bucket"))): _*)).as("tb"))
       .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .localCheckpoint()
     val qTabled = broadcast(tabled
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q"), col("t"), col("bucket")))
@@ -302,8 +300,7 @@ object Similarity {
     * plane families lift per-pair recall to 1 − (1 − p^nPlanes)^nTables,
     * measured by `ann_neardup_recall`).
     *
-    * Scale shape — the narrow-pair discipline of
-    * [[graft.dedup.Dedup.simhashCandidates]]: candidate (a, b) pairs are
+    * Scale shape — narrow pairs: candidate (a, b) pairs are
     * enumerated per (t, bucket) ([[graft.dedup.Dedup.bucketPairs]]), so
     * only (t, bucket, vec_id) triples are exchanged, and are DISTINCT'd
     * while still narrow; the full embedding arrays are joined back only

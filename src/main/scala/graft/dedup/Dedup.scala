@@ -97,23 +97,34 @@ object Dedup {
 
   /** Distinct pairs (a, b), a < b, of the `id` values that share a bucket
     * of `table` — a row of the `keys` columns, none of them null (a null
-    * key matches nothing, as in an equi-join). Each bucket's ids are
-    * collected and sorted, cut to the `cap` lowest, and every member is
-    * paired with the members after it: one shuffle keyed by the bucket, no
-    * join, and the table is read once, so it needs no materialization. A
-    * null id is in no pair.
+    * key matches nothing, as in an equi-join). Each bucket's members are
+    * collected and sorted by id, cut to the `cap` lowest, and every member
+    * is paired with the members after it: one shuffle keyed by the bucket,
+    * no join, and the table is read once, so it needs no materialization.
+    * A null id is in no pair. Each `carry` column rides with its row's id
+    * in the member list and comes out as `<c>_a` and `<c>_b`, so a pair
+    * can be verified without joining its ids back to the table.
     *
     * A bucket's member list is one row, so buckets must stay small — as
-    * their quadratic pair count already requires.
+    * their quadratic pair count already requires — and carried columns
+    * narrow.
     */
   private[graft] def bucketPairs(table: DataFrame, keys: Seq[String], id: String,
-      cap: Int = Int.MaxValue): DataFrame = {
-    val sorted = array_sort(collect_list(col(id)))
-    table.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      cap: Int = Int.MaxValue, carry: Seq[String] = Nil): DataFrame = {
+    // without carried columns the members are bare ids: a one-field struct
+    // made the pair stage ~10% slower (4.35M pairs from 30-member buckets,
+    // local[4])
+    val members = id +: carry
+    val sorted = array_sort(collect_list(
+      if (carry.isEmpty) col(id) else struct(members.map(col): _*)))
+    val ends = if (carry.isEmpty) Seq(col("a"), col("b")) else members.flatMap(c =>
+      Seq("a", "b").map(e => col(e).getField(c).as(if (c == id) e else s"${c}_$e")))
+    table.filter((keys :+ id).map(col(_).isNotNull).reduce(_ && _))
       .groupBy(keys.map(col): _*)
-      .agg((if (cap == Int.MaxValue) sorted else slice(sorted, 1, cap)).as("ids"))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a")))
-      .select(col("a"), explode(slice(col("ids"), col("i") + 2, size(col("ids")))).as("b"))
+      .agg((if (cap == Int.MaxValue) sorted else slice(sorted, 1, cap)).as("ms"))
+      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
+      .select(col("a"), explode(slice(col("ms"), col("i") + 2, size(col("ms")))).as("b"))
+      .select(ends: _*)
       .filter(col("a") < col("b"))
       .distinct()
   }
@@ -154,7 +165,14 @@ object Dedup {
     * (measured on the 5k-doc sf0.1 corpus: raw join tuples 5.0M → 1.2M,
     * distinct candidate pairs 4.02M → 848k, recall of true hamming ≤ 6
     * pairs 5840/5840).
-    * Runs one Spark job when called: the fingerprint table's `localCheckpoint`.
+    *
+    * Each 8-byte fingerprint rides with its doc id through the bucket
+    * ([[bucketPairs]]' `carry`), so a pair is verified where it is
+    * enumerated and the fingerprint table is read once, with no join back.
+    * For unique `doc_id` (the documents table's key) this equals joining
+    * both fingerprints back to the distinct pairs; were a `doc_id`
+    * duplicated, only the fingerprint pairs that share a bucket would be
+    * reported, not every combination of the two ids' fingerprints.
     */
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
     // Recall guarantee: hamming ≤ maxHamming flips at most maxHamming of
@@ -162,13 +180,6 @@ object Dedup {
     // That only holds for maxHamming ≤ 6; wider thresholds need a
     // different block-combination family.
     require(maxHamming <= 6, s"band-pair keys cover hamming <= 6, got $maxHamming")
-    // Materialize the NARROW fingerprint table (16 B/doc) once: it feeds
-    // the banding explode AND both sides of the verify join-back, and each
-    // reference otherwise re-runs the full tokenize+md5 SimHash pass over
-    // the corpus (three passes total). Materializing the fingerprint
-    // table is also the honest 100 TB shape — it is exactly what a
-    // deployment persists between candidate generation and verification.
-    val sh = simhashDocs(docs).localCheckpoint()
     // Block-combination keys (the published web-scale simhash indexing
     // trick): key on PAIRS of 8-bit bands — C(8,2) = 28 keys of 16 bits
     // each. Single 8-bit bands give only 256 buckets per band, so at
@@ -177,27 +188,23 @@ object Dedup {
     // 256× finer for 3.5× more keys, with the hamming ≤ 6 pigeonhole
     // guarantee intact (≥2 clean bands ⇒ their pair key matches).
     val combos = for { i <- 0 until 8; j <- (i + 1) until 8 } yield (i, j)
-    val banded = sh.select(col("doc_id"),
+    val banded = simhashDocs(docs).select(col("doc_id"), col("sh64"),
       explode(array(combos.map { case (i, j) =>
         struct(lit(i * 8 + j).as("band"),
           (shiftright(col("sh64"), i * 8).bitwiseAND(lit(255L)) * lit(256L) +
             shiftright(col("sh64"), j * 8).bitwiseAND(lit(255L))).as("key"))
       }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+      .select(col("doc_id"), col("sh64"), col("bk.band").as("band"), col("bk.key").as("key"))
     // A near-identical corpus makes band buckets FAT: they enumerate
     // millions of (a,b) tuples for thousands of distinct pairs (measured
-    // 2.9M → 24k on the 500-doc test corpus). So dedupe the
-    // NARROW (a,b) first, then join the fingerprint table back for the
-    // hamming verify — never drag fingerprints through the candidate
-    // shuffle. A doc with a null fingerprint (null text) has null keys and
-    // so no candidate. No broadcast hint: at corpus scale the fingerprint
-    // table is huge and the CANDIDATE side is the small one — AQE picks
-    // the right side.
-    bucketPairs(banded, Seq("band", "key"), "doc_id")
-      .join(sh.select(col("doc_id").as("a"), col("sh64").as("sh_a")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("sh64").as("sh_b")), "b")
+    // 2.9M → 24k on the 500-doc test corpus), so the pairs are deduped
+    // before the verify. Only the 8-byte fingerprint rides in the bucket
+    // with the id — the text never enters the candidate shuffle. A doc
+    // with a null fingerprint (null text) has null keys and so no
+    // candidate.
+    bucketPairs(banded, Seq("band", "key"), "doc_id", carry = Seq("sh64"))
       .select(col("a"), col("b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+        bit_count(col("sh64_a").bitwiseXOR(col("sh64_b"))).as("hamming"))
       .withColumn("is_dup", (col("hamming") <= maxHamming).cast("int"))
   }
 

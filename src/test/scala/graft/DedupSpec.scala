@@ -227,5 +227,55 @@ class DedupSpec extends SparkSpec {
     assert(atCall(1)(Dedup.minhashCandidates(docs)) == Seq("collect"))
     assert(atCall(1)(Similarity.cosineNearDup(emb, 0.25)) == Seq("collect"))
     assert(atCall(2)(Similarity.semDedupPairs(emb, 0.25)) == Seq("collect", "collect"))
+    assert(atCall(1)(Dedup.simhashCandidates(docs)) == Seq("collect"))
+    assert(atCall(1)(Similarity.lshTopKMulti(emb, 0L until 8L, 5)) == Seq("collect"))
+  }
+
+  /** The simhash candidate formulation that carrying `sh64` in the bucket
+    * replaced: the distinct (a, b) pairs of the band-pair buckets, with both
+    * fingerprints joined back by doc id for the hamming verify.
+    */
+  private def simhashJoinBack(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
+    val sh = Dedup.simhashDocs(docs)
+    val combos = for { i <- 0 until 8; j <- (i + 1) until 8 } yield (i, j)
+    val banded = sh.select(col("doc_id"),
+      explode(array(combos.map { case (i, j) =>
+        struct(lit(i * 8 + j).as("band"),
+          (shiftright(col("sh64"), i * 8).bitwiseAND(lit(255L)) * lit(256L) +
+            shiftright(col("sh64"), j * 8).bitwiseAND(lit(255L))).as("key"))
+      }: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    Dedup.bucketPairs(banded, Seq("band", "key"), "doc_id")
+      .join(sh.select(col("doc_id").as("a"), col("sh64").as("sh_a")), "a")
+      .join(sh.select(col("doc_id").as("b"), col("sh64").as("sh_b")), "b")
+      .select(col("a"), col("b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+      .withColumn("is_dup", (col("hamming") <= maxHamming).cast("int"))
+  }
+
+  test("simhash candidates verified in the bucket equal the fingerprint join-back") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 40).map(i => s"w$i")
+    def words(n: Int): String = Seq.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    // 60 near-identical docs (one token differs) share most band-pair keys:
+    // fat buckets that enumerate each pair many times
+    val base = words(30)
+    val cluster = (0 until 60).map(i => (10000L + i, s"$base w${i % 7}"))
+    val nullText = Seq[(Long, String)]((-1L, null), (-2L, null))
+    val generated = (0 until 300).map(i => (20000L + i, words(3 + rnd.nextInt(12))))
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    for ((name, docs) <- Seq(
+        "sf0.001 + cluster + null text" -> corpus.union((cluster ++ nullText).toDF("doc_id", "text")),
+        "generated + cluster + null text" -> (generated ++ cluster ++ nullText).toDF("doc_id", "text"))) {
+      val want = simhashJoinBack(docs)
+      val got = Dedup.simhashCandidates(docs)
+      assert(got.columns.toSeq == want.columns.toSeq, name)
+      assert(want.filter(col("is_dup") === 1).count() > 0, name)
+      assert(want.filter(col("a") >= 10000L && col("a") < 10060L).count() > 0, name)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, name)
+    }
   }
 }

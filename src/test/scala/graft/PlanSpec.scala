@@ -197,6 +197,36 @@ class PlanSpec extends SparkSpec {
     assert(joinsKeyedOn(exec, "cent_id").isEmpty, s"cent_id-keyed join:\n$exec")
   }
 
+  test("simhashCandidates verifies in the bucket: no join on a/b, no text in the bucket exchange") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val exec = graft.dedup.Dedup.simhashCandidates(docs).queryExecution.executedPlan
+    val bucketExchanges = exec.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.toString.contains("band") => e
+    }
+    assert(bucketExchanges.nonEmpty, s"expected a (band, key) exchange:\n$exec")
+    bucketExchanges.foreach { e =>
+      assert(!e.output.exists(a => a.name == "text" || a.dataType.typeName == "string"),
+        s"text in the candidate shuffle: ${e.output}\n$exec")
+    }
+    assert(joinsKeyedOn(exec, "a").isEmpty && joinsKeyedOn(exec, "b").isEmpty,
+      s"fingerprint join-back on a/b:\n$exec")
+  }
+
+  test("lshTopKMulti: no materialized table, the query side's filter reaches both its scans") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val emb = s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val p = plan(graft.ann.Similarity.lshTopKMulti(emb, 0L until 8L, 5))
+    assert(!p.contains("Scan ExistingRDD"), s"materialized input:\n$p")
+    val pushed = "PushedFilters: \\[[^\\n]*In\\(vec_id, \\[0,1,2,3,4,5,6,7\\]\\)".r
+      .findAllIn(p).length
+    assert(pushed == 2, s"expected 2 query-side scans with the pushed In:\n$p")
+  }
+
   test("tfidf: ONE tokenize+aggregate scan serves both tf and df branches") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val q = graft.text.TextAnalysis.tfidf(docs)

@@ -116,6 +116,16 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.writeResumable(routedSf001, out, 2, "sf0.001") == 0)
   }
 
+  test("writeResumable leaves the session's partitionOverwriteMode as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val s = spark.newSession()
+    s.conf.set(key, "static")
+    val out = Files.createTempDirectory("graft-overwrite-mode").toString
+    assert(Sinks.writeResumable(Pipeline.routedFromEvents(s, "/root/testdata/sf0.001"),
+      out, nBuckets = 2, source = "sf0.001") == 2)
+    assert(s.conf.get(key) == "static")
+  }
+
   test("salted stamping equals plain window stamping, incl. a hot conversation (F04)") {
     // 1 hot conversation with 500 turns + commits only near the end blocks
     val hot = (1 to 500).map { i =>
@@ -139,5 +149,18 @@ class SinksSpec extends SparkSpec {
     assert(plain(("hot", 451)).contains(490L))
     assert(plain(("hot", 491)).isEmpty) // after last commit: never drained
     assert(plain(("cold", 1)).contains(7L))
+  }
+
+  test("turns are unique per (conv_id, turn_idx), as stampSalted's min_by needs") {
+    // stampSalted picks each block's first commit with min_by(xid, turn_idx):
+    // two commits sharing a turn_idx would make that pick arbitrary
+    for ((name, turns) <- Seq(
+        "fromEvents sf0.001" -> Transcripts.fromEvents(spark, "/root/testdata/sf0.001"),
+        "synthetic" -> Transcripts.synthetic(spark, 10000, 100),
+        "synthetic, hot conversation" -> Transcripts.synthetic(spark, 10000, 100, skewPct = 10))) {
+      val n = turns.count()
+      assert(n > 0, name)
+      assert(turns.select("conv_id", "turn_idx").distinct().count() == n, name)
+    }
   }
 }
