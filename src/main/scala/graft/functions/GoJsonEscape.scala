@@ -7,10 +7,9 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expression: Go `encoding/json` string escaping
-  * (HTML-safe), with `doGenCode` so the canonical-JSON serialization path
-  * can stay inside whole-stage codegen instead of falling back to a typed
-  * `Dataset.map` (SURVEY.md §7.3 — the one serializer Spark's `to_json`
-  * cannot express).
+  * (HTML-safe), with `doGenCode` so [[CanonicalJson.document]] — the one
+  * serializer Spark's `to_json` cannot express (SURVEY.md §7.3) — stays
+  * inside whole-stage codegen.
   *
   * The generated code calls [[CanonicalJson.escape]] directly — a static,
   * allocation-light scalar — so the expression is pipelined like any

@@ -28,19 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Route {
 
-  /** Key-sorted (k,v) entries of one mapped physical row — the Data.Row
-    * analog (`message.go:52-57`), canonical for serialization: Go marshals
-    * map keys alphabetically (§1.3 of SURVEY.md).
-    */
-  def rowEntries(names: Column, vals: Column): Column = {
-    val mismatch = size(vals) =!= size(names)
-    val entries = when(mismatch,
-        transform(vals, (v, i) =>
-          struct(concat(lit("(unknown_"), i.cast("string"), lit(")")).as("k"), v.as("v"))))
-      .otherwise(zip_with(names, vals, (n, v) => struct(n.as("k"), v.as("v"))))
-    array_sort(entries)
-  }
-
   /** Routable row event: lookup matched AND a commit follows in-conversation
     * (`binlog_to_messages.go:41-54,84-87`).
     */

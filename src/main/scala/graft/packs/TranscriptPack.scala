@@ -49,12 +49,10 @@ object TranscriptPack extends QueryPack {
     FROM stamped p LEFT JOIN lookup l ON p.role = l.role AND p.tool = l.tool)"""
 
   /** DuckDB expression: canonical "k=v,..." repr of one physical row `v`
-    * against `field_names` (mirrors [[Enrich.rowRepr]]).
-    */
-  /** Key-FIRST sort via struct list_sort (struct comparison is field-order
-    * lexicographic), mirroring [[Enrich.rowRepr]]/MapRows: sorting the
-    * concatenated "k=v" string diverges when a key prefixes another key
-    * (ADVICE r01).
+    * against `field_names`. Key-FIRST sort via struct list_sort (struct
+    * comparison is field-order lexicographic), mirroring
+    * [[Enrich.rowRepr]]/MapRows: sorting the concatenated "k=v" string
+    * diverges when a key prefixes another key (ADVICE r01).
     */
   private def duckRepr(v: String): String =
     // field names chosen to avoid capture: this fragment is itself embedded
@@ -73,7 +71,7 @@ object TranscriptPack extends QueryPack {
 
   /** DuckDB expression: compact-JSON object body of one physical row `v` —
     * the `{"k":v,...}` Row payload (mirrors
-    * [[graft.functions.CanonicalJson.jsonColumnCompact]]'s row rendering):
+    * [[graft.functions.CanonicalJson.document]]'s compact row rendering):
     * same key-first struct sort as [[duckRepr]], int-like values unquoted
     * (Go marshals the decoder's typed ints as numbers), corpus escape-free.
     */
@@ -189,11 +187,11 @@ object TranscriptPack extends QueryPack {
       Pipeline.routedFromEvents(s, dir)
         .filter(col("event_type") === "Query")
         .select(col("conv_id"), col("turn_idx"),
-          graft.functions.CanonicalJson.jsonColumnCompact.as("doc"))),
+          graft.functions.CanonicalJson.document(pretty = false).as("doc"))),
 
     // K2 row messages (VERDICT r02 #1-missing): compact json.Marshal for
-    // Insert/Delete/Update — Data/OldData/NewData assembled from the same
-    // sorted (k,v) entry structs the pretty renderer uses
+    // Insert/Delete/Update — Data/OldData/NewData rendered by the NDJSON
+    // sink's own serializer from the sorted (k,v) entry structs
     // (consumer_chain.go:103-109 over message.go:52-96). With k2_json_compact
     // this oracle-proves the reference's DEFAULT output mode for all four
     // message types. The generated corpus is escape-free (verified: no
@@ -203,7 +201,7 @@ object TranscriptPack extends QueryPack {
       Pipeline.routedFromEvents(s, dir)
         .filter(col("event_type") =!= "Query")
         .select(col("conv_id"), col("turn_idx"), col("event_type"),
-          graft.functions.CanonicalJson.jsonColumnCompact.as("doc"))),
+          graft.functions.CanonicalJson.document(pretty = false).as("doc"))),
 
     // G1/G2 streaming mode (VERDICT r02 #7): the reference's ACTUAL
     // sequential buffer-drain semantics (rows_event_buffer.go:7-24) as

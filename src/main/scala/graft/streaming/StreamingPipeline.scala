@@ -109,17 +109,15 @@ object StreamingPipeline {
   }
 
   /** Streaming NDJSON sink — `streamCollector` (`consumer_chain.go:61-81`)
-    * as a continuous query: each routed message serialized by the
-    * CODEGEN'D canonical-JSON expression (no typed map, so the streaming
-    * plan stays whole-stage) and appended newline-delimited via the text
-    * file sink (exactly-once through the sink's commit log + the state
-    * store checkpoint). Returns the started query.
+    * as a continuous query: each routed message serialized by
+    * [[graft.functions.CanonicalJson.fromRouted]] (one codegen'd column, so
+    * the streaming plan stays whole-stage) and appended newline-delimited
+    * via the text file sink (exactly-once through the sink's commit log +
+    * the state store checkpoint). Returns the started query.
     */
   def ndjsonSink(routedStream: DataFrame, outDir: String, checkpointDir: String,
       pretty: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    val doc = if (pretty) graft.functions.CanonicalJson.jsonColumn
-      else graft.functions.CanonicalJson.jsonColumnCompact
-    routedStream.select(doc.as("value"))
+    graft.functions.CanonicalJson.fromRouted(routedStream, pretty)
       .writeStream
       .format("text")
       .option("checkpointLocation", checkpointDir)

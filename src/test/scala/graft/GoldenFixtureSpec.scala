@@ -40,7 +40,7 @@ class GoldenFixtureSpec extends SparkSpec {
 
   test("first message is byte-exact canonical JSON (01.json:1-18 shape)") {
     val docs = CanonicalJson.fromRouted(
-      routed.orderBy("turn_idx", "row_repr")).collect()
+      routed.orderBy("turn_idx", "row_repr"), pretty = true).collect()
     assert(docs.length == 10)
     val expected =
       """{

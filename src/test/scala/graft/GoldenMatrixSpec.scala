@@ -21,7 +21,7 @@ class GoldenMatrixSpec extends SparkSpec {
 
   private def docsOf(rows: Seq[(String, Int, String, String, String)]): Array[String] =
     CanonicalJson.fromRouted(
-      routedOf(rows).orderBy("turn_idx", "old_repr", "row_repr")).collect()
+      routedOf(rows).orderBy("turn_idx", "old_repr", "row_repr"), pretty = true).collect()
 
   // ----- F02: DDL query + arity mismatch (MORE values than names) --------
   // 02.json:22-28; row_data.go:46. (user, db) -> departments(dept_no,
@@ -223,7 +223,7 @@ class GoldenMatrixSpec extends SparkSpec {
     val routed = routedOf(f10)
     val texts = routed.select("text").collect().map(_.getString(0))
     assert(texts.toSeq == Seq(f10.head._4)) // noise emits no message; insert text intact
-    val doc = CanonicalJson.fromRouted(routed).collect().head
+    val doc = CanonicalJson.fromRouted(routed, pretty = true).collect().head
     assert(doc.contains("\"building_name\": \"héllo 😀\""))
     assert(doc.contains("\"address\": \"中文​\""))
   }
@@ -274,7 +274,7 @@ class GoldenMatrixSpec extends SparkSpec {
     val part = Files.list(Paths.get(dir)).iterator.asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq.head
     val content = new String(Files.readAllBytes(part), "UTF-8")
-    val docs = CanonicalJson.fromRouted(routedOf(f05).orderBy("turn_idx")).collect()
+    val docs = CanonicalJson.fromRouted(routedOf(f05).orderBy("turn_idx"), pretty = true).collect()
     assert(content == docs.mkString("", "\n", "\n"))
   }
 }

@@ -114,13 +114,13 @@ class PlanSpec extends SparkSpec {
       s"corpus-side shuffle in IVF assignment:\n$exec")
   }
 
-  test("IVF training samples via distributed top-N, never a global corpus sort (VERDICT r03 #7)") {
+  /** Executed plan of the first Spark query that `run` starts, captured
+    * when it finishes (listener events arrive asynchronously; only queries
+    * created after `since` count); null if none finished within 60 s.
+    */
+  private def firstPlanOf(run: => Unit): String = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    // training returns a local codebook: its one Spark query is the sample,
-    // whose executed plan is captured when it finishes (listener events
-    // arrive asynchronously; only queries created after `since` count)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     @volatile var since = Long.MaxValue
     val listener = new QueryExecutionListener {
@@ -129,13 +129,19 @@ class PlanSpec extends SparkSpec {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val p = try {
+    try {
       since = spark.range(1).queryExecution.id
-      graft.ann.Similarity.trainCentroids(emb, 16)
+      run
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
       while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       plans.peek()
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("IVF training samples via distributed top-N, never a global corpus sort (VERDICT r03 #7)") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    // training returns a local codebook: its one Spark query is the sample
+    val p = firstPlanOf(graft.ann.Similarity.trainCentroids(emb, 16))
     assert(p != null, "no Spark query seen while training")
     // orderBy(h).limit(sampleN) must plan as TakeOrderedAndProject — a
     // distributed per-partition top-N + driver merge of sampleN rows. A
@@ -245,6 +251,20 @@ class PlanSpec extends SparkSpec {
     // per-doc top-k pushes the limit below the exchange (partial group
     // limit), never a global sort
     assert(p.contains("WindowGroupLimit") && !p.contains("GlobalSort"), p)
+  }
+
+  test("writeNdjson serializes inside codegen: no object (de)serialization in its plan") {
+    val routed = Pipeline.routed(
+      Transcripts.synthetic(spark, 10000, 100),
+      Transcripts.lookup(spark))
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-ndjson").toString
+    val p = firstPlanOf(graft.checkpoint.Sinks.writeNdjson(routed, dir))
+    assert(p != null && p.contains("InsertIntoHadoopFsRelationCommand"),
+      s"no write seen:\n$p")
+    // a typed Dataset.map plans as DeserializeToObject → MapElements →
+    // SerializeFromObject: rows leave the codegen'd UnsafeRow form per message
+    for (node <- Seq("DeserializeToObject", "MapElements", "SerializeFromObject"))
+      assert(!p.contains(node), s"$node in the sink plan:\n$p")
   }
 
   test("salted stamping plan avoids a full-width second exchange of the big frame") {
