@@ -5,15 +5,19 @@ import graft.sources.Transcripts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Pipeline composition — the `parse → enrich → route → aggregate` DAG.
-  * Each stage is a pure DataFrame→DataFrame function (independently
-  * testable, like the reference's library entry points
-  * `parser/binlog_parser.go:9-15`); `Pipeline` just composes them.
+/** Pipeline composition — the `parse → stamp → enrich → route` DAG, ONE
+  * composition for batch and streaming ([[Pipeline.composed]]). Each stage
+  * is a pure DataFrame→DataFrame function (independently testable, like
+  * the reference's library entry points `parser/binlog_parser.go:9-15`);
+  * the only stage that differs between the modes is the transaction stamp,
+  * which the caller passes in: the batch window ([[TxnStamp.stamp]] or
+  * [[TxnStamp.stampSalted]]) here, the per-conversation buffer drained on
+  * commit in [[graft.streaming.StreamingPipeline.stamp]].
   *
-  * Plan shape (verified via explain in tests): one parquet scan →
-  * WholeStageCodegen(parse) → single hash Exchange on conv_id → Sort +
-  * WindowExec (txn stamp) → BroadcastHashJoin (lookup) → Generate(explode)
-  * → Filter → output. Exactly one shuffle end-to-end.
+  * Batch plan shape (verified via explain in tests): one parquet scan →
+  * WholeStageCodegen(parseKind) → single hash Exchange on conv_id → Sort +
+  * WindowExec (txn stamp) → withVals → BroadcastHashJoin (lookup) →
+  * Generate(explode) → Filter → output. Exactly one shuffle end-to-end.
   */
 case class PipelineConfig(
     includeRoles: Seq[String] = Nil,
@@ -25,27 +29,45 @@ case class PipelineConfig(
 
 object Pipeline {
 
-  /** Parsed + txn-stamped + lookup-enriched turns (pre-explode).
+  /** The batch txn stamp `cfg.saltBlockSize` selects. */
+  private def batchStamp(cfg: PipelineConfig): DataFrame => DataFrame =
+    cfg.saltBlockSize match {
+      case Some(sz) => TxnStamp.stampSalted(_, sz)
+      case None => TxnStamp.stamp
+    }
+
+  /** Parsed + txn-stamped + lookup-enriched turns (pre-explode), stamped by
+    * `stamp` over [[Parse.parseKind]]'s output.
     *
     * Parse order (guide §2.3 "project before the exchange"): only the
-    * dispatch columns the txn-stamp window needs (kind, xid — cheap
-    * substring extractions) are computed BEFORE the conv_id exchange; the
-    * wide `vals` payload decode and stmt extraction run AFTER it, in the
-    * post-shuffle stage. `vals` serializes to roughly the text bytes again
-    * plus array offsets, so parsing it pre-shuffle nearly doubled every
-    * shuffled row's width for no benefit — the window never reads it.
-    * Result columns/values are identical to stamping Parse.parse output
-    * (oracle- and spec-checked); only the stage that computes them moves.
+    * dispatch columns the stamp needs (kind, xid — cheap substring
+    * extractions) are computed BEFORE the stamp's conv_id exchange or
+    * state; the wide `vals` payload decode and stmt extraction run AFTER
+    * it, in the post-shuffle stage. `vals` serializes to roughly the text
+    * bytes again plus array offsets, so parsing it first nearly doubled
+    * every shuffled (and, streaming, every buffered) row's width for no
+    * benefit — the stamp never reads it.
+    */
+  private def enrichedWith(turns: DataFrame, lookup: DataFrame,
+      stamp: DataFrame => DataFrame): DataFrame =
+    Enrich.withLookup(Parse.withVals(stamp(Parse.parseKind(turns))), lookup)
+
+  /** The one composition of both modes: role pushdown → parseKind → `stamp`
+    * → withVals → enrich → route → include filters.
+    */
+  private[graft] def composed(turns: DataFrame, lookup: DataFrame,
+      cfg: PipelineConfig, stamp: DataFrame => DataFrame): DataFrame =
+    Route.includeFilters(
+      Route.messages(enrichedWith(
+        pushRoleFilter(turns, cfg.includeRoles), lookup, stamp)),
+      cfg.includeRoles, cfg.includeTools)
+
+  /** Batch enriched turns: [[enrichedWith]] under the batch stamp. The
+    * include filters select messages, so they apply only to [[routed]].
     */
   def enriched(turns: DataFrame, lookup: DataFrame,
-      cfg: PipelineConfig = PipelineConfig()): DataFrame = {
-    val parsed = Parse.parseKind(turns)
-    val stamped = cfg.saltBlockSize match {
-      case Some(sz) => TxnStamp.stampSalted(parsed, sz)
-      case None => TxnStamp.stamp(parsed)
-    }
-    Enrich.withLookup(Parse.withVals(stamped), lookup)
-  }
+      cfg: PipelineConfig = PipelineConfig()): DataFrame =
+    enrichedWith(turns, lookup, batchStamp(cfg))
 
   /** Role include-filter, pushed AHEAD of parse (VERDICT r01 #6): every
     * message inherits its turn's role verbatim, so non-matching turns can
@@ -69,13 +91,10 @@ object Pipeline {
       col("role") === "" || col("role").isin(includeRoles: _*) ||
         col("text").startsWith("EVENT commit "))
 
-  /** Full routed message stream. */
+  /** Full routed message stream: [[composed]] under the batch stamp. */
   def routed(turns: DataFrame, lookup: DataFrame,
       cfg: PipelineConfig = PipelineConfig()): DataFrame =
-    Route.includeFilters(
-      Route.messages(enriched(
-        pushRoleFilter(turns, cfg.includeRoles), lookup, cfg)),
-      cfg.includeRoles, cfg.includeTools)
+    composed(turns, lookup, cfg, batchStamp(cfg))
 
   /** Convenience: routed stream over the sfDir-derived transcript table. */
   def routedFromEvents(spark: SparkSession, sfDir: String,

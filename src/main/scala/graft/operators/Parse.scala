@@ -45,13 +45,21 @@ object Parse {
     when(locate(marker, col("text")) > 0,
       substring(col("text"), locate(marker, col("text")) + marker.length, lit(Int.MaxValue)))
 
-  /** The dispatch-only prefix of [[parse]]: kind + commit xid — exactly the
-    * columns transaction stamping consumes. Split out so the pipeline can
-    * run the txn-stamp shuffle on THIS narrow frame and defer the wide
-    * payload parse ([[withVals]]) to after the exchange: `vals`
+  /** The leading space-delimited token after `marker`, TRY-cast to `to`: a
+    * malformed value (`xid=abc`) becomes null instead of failing the whole
+    * query under ANSI casts; trailing fields (`xid=5 extra`) are ignored.
+    */
+  private def leadingToken(marker: String, to: String): Column =
+    substring_index(tail(marker), " ", 1).try_cast(to)
+
+  /** The dispatch half of the parse: kind + commit xid — exactly the
+    * columns transaction stamping consumes. The pipeline runs the txn-stamp
+    * shuffle (batch window or streaming state) on THIS narrow frame and
+    * defers the wide payload parse ([[withVals]]) to after it: `vals`
     * (array<array<string>>) serializes to roughly the text's bytes again
     * plus per-element offsets, so parsing it pre-shuffle ~doubled every
-    * shuffled row (guide §2.3 "project before the exchange").
+    * shuffled row (guide §2.3 "project before the exchange"). A commit
+    * without a usable xid gets a null xid, which both stamps skip.
     */
   def parseKind(turns: DataFrame): DataFrame = {
     // "EVENT <kind> ..." -> <kind>, whitelisted (word-boundary analog)
@@ -61,12 +69,12 @@ object Parse {
     turns
       .withColumn("kind", kind)
       .withColumn("xid",
-        when(col("kind") === "commit", tail("xid=").cast("long")))
+        when(col("kind") === "commit", leadingToken("xid=", "long")))
   }
 
-  /** The payload suffix of [[parse]]: stmt/suppressed + the `vals` row
-    * decode — pure row-local work any stage can host, so the pipeline runs
-    * it after the txn-stamp exchange.
+  /** The payload half of the parse, over [[parseKind]]'s output:
+    * stmt/suppressed + the `vals` row decode — pure row-local work any
+    * stage can host, so the pipeline runs it after the txn stamp.
     */
   def withVals(parsedKind: DataFrame): DataFrame = {
     // "[a|b];[c|d]" -> [["a","b"],["c","d"]] — fused one-pass parser with
@@ -80,18 +88,9 @@ object Parse {
       .withColumn("suppressed", col("kind") === "query" && isSuppressed(col("stmt")))
       .withColumn("rows_declared",
         when(col("kind").isin("insert", "update", "delete"),
-          substring_index(tail("rows="), " ", 1).cast("int")))
+          leadingToken("rows=", "int")))
       .withColumn("vals",
         when(col("kind").isin("insert", "update", "delete"), vals))
-  }
-
-  def parse(turns: DataFrame): DataFrame = {
-    // composed from the two pipeline halves, re-projected to the original
-    // column order so the one-call form stays byte-identical for callers
-    val orig = turns.columns.toSeq
-    withVals(parseKind(turns)).select(
-      (orig ++ Seq("kind", "stmt", "suppressed", "xid", "rows_declared", "vals"))
-        .map(col): _*)
   }
 
   /** RFC3339 UTC event time — `messages/message.go:24-32`

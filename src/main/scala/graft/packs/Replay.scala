@@ -47,7 +47,7 @@ object Replay {
   def withCheckpointDir[T](prefix: String)(f: String => T): T =
     withReplayDir(prefix)(f)
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse

@@ -120,7 +120,7 @@ object TranscriptPack extends QueryPack {
 
     // P1/P2: grammar parse + dispatch + BEGIN/SAVEPOINT classification
     "p1_parse" -> ((s, dir) =>
-      Parse.parse(turns(s, dir)).select(
+      Parse.withVals(Parse.parseKind(turns(s, dir))).select(
         col("conv_id"), col("turn_idx"), col("kind"), col("stmt"),
         col("suppressed").cast("int").as("suppressed"),
         col("xid"), col("rows_declared"),
@@ -128,13 +128,13 @@ object TranscriptPack extends QueryPack {
 
     // G1/G2: commit-xid backward propagation (txn stamping)
     "g2_txn_stamp" -> ((s, dir) =>
-      TxnStamp.stamp(Parse.parse(turns(s, dir))).select(
+      TxnStamp.stamp(Parse.parseKind(turns(s, dir))).select(
         col("conv_id"), col("turn_idx"), col("kind"), col("txn_id"))),
 
     // G2 (skew path): salted per-block stamping + backfill — must agree
     // with the plain window (same oracle); tiny blockSize stresses backfill
     "g2_txn_stamp_salted" -> ((s, dir) =>
-      TxnStamp.stampSalted(Parse.parse(turns(s, dir)), blockSize = 4).select(
+      TxnStamp.stampSalted(Parse.parseKind(turns(s, dir)), blockSize = 4).select(
         col("conv_id"), col("turn_idx"), col("kind"), col("txn_id"))),
 
     // E1/E3: broadcast lookup join + matched/dropped flags
@@ -225,7 +225,7 @@ object TranscriptPack extends QueryPack {
           .write.mode("overwrite").parquet(replayDir)
         val input = s.readStream.schema(graft.model.Model.turnsSchema)
           .parquet(replayDir)
-        val stamped = graft.streaming.StreamingPipeline.stamped(input)
+        val stamped = graft.streaming.StreamingPipeline.stamp(Parse.parseKind(input))
           .select(col("conv_id"), col("turn_idx"), col("kind"), col("txn_id"))
         val q = stamped.writeStream.format("memory").queryName("g2_stream_oracle")
           .option("checkpointLocation", Replay.checkpointIn(replayDir))

@@ -1,23 +1,26 @@
 package graft.streaming
 
-import graft.operators.{Enrich, Parse, Route}
-import graft.{PipelineConfig}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.{Pipeline, PipelineConfig}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming mode of the pipeline.
   *
-  * parse → enrich → route are pure column transforms and run unchanged on a
-  * streaming DataFrame. Only transaction stamping changes: the batch window
-  * (commit-xid propagated backward) becomes the reference's ORIGINAL
-  * sequential semantics — a per-conversation buffer drained on commit
-  * (`parser/parser/rows_event_buffer.go:7-24`, `binlog_to_messages.go:41-54`)
-  * — implemented as `flatMapGroupsWithState` keyed by conv_id: row events
-  * buffer in state; each commit drains and stamps them; queries pass
-  * through with txn_id 0; a processing-time timeout discards abandoned
-  * buffers exactly like the reference discards an un-committed buffer at
-  * EOF.
+  * [[routedStream]] is the batch pipeline's own composition
+  * ([[graft.Pipeline.composed]]: role pushdown → parseKind → stamp →
+  * withVals → enrich → route → include filters) with ONE operator swapped:
+  * the batch stamp's window (commit xid propagated backward) becomes the
+  * reference's ORIGINAL sequential semantics — a per-conversation buffer
+  * drained on commit (`parser/parser/rows_event_buffer.go:7-24`,
+  * `binlog_to_messages.go:41-54`) — implemented as
+  * `flatMapGroupsWithState` keyed by conv_id ([[stamp]]): row events
+  * buffer in state; each commit with an xid drains and stamps them;
+  * queries pass through with txn_id 0; a processing-time timeout discards
+  * abandoned buffers exactly like the reference discards an un-committed
+  * buffer at EOF. Like the batch window, the stamp sees only the dispatch
+  * columns: `stmt`/`vals` are parsed after the drain, so neither the
+  * shuffle nor the state store carries them.
   *
   * Assumes per-conversation in-order arrival (turns sorted by turn_idx
   * within each micro-batch; cross-batch order preserved by the source) —
@@ -25,29 +28,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingPipeline {
 
-  case class ParsedTurn(
-      conv_id: String, turn_idx: Int, role: String, text: String,
-      tool: String, ts: java.sql.Timestamp,
-      kind: String, stmt: String, suppressed: Boolean,
-      xid: Option[Long], vals: Option[Seq[Seq[String]]])
-
+  /** A turn's dispatch columns — the stamp's input, state and output row
+    * (`txn_id` is None until the stamp sets it).
+    */
   case class StampedTurn(
       conv_id: String, turn_idx: Int, role: String, text: String,
-      tool: String, ts: java.sql.Timestamp,
-      kind: String, stmt: String, suppressed: Boolean,
-      xid: Option[Long], vals: Option[Seq[Seq[String]]],
-      txn_id: Option[Long])
+      tool: String, ts: java.sql.Timestamp, kind: String,
+      xid: Option[Long], txn_id: Option[Long] = None)
 
-  case class ConvState(buffered: List[ParsedTurn])
+  case class ConvState(buffered: List[StampedTurn])
 
   /** The RowsEventBuffer as a state function: buffer row events, drain on
-    * commit with the commit's xid, pass queries through immediately.
+    * commit with the commit's xid, pass queries through immediately. A
+    * commit without a usable xid drains nothing and passes through with a
+    * null txn_id: the buffer waits for the next commit, as the batch
+    * window's `ignoreNulls` does.
     * `timeoutMs > 0` arms a processing-time timeout that discards abandoned
     * buffers (reference EOF behavior). NOTE: timeouts make Spark fire
     * continuous empty micro-batches, so `processAllAvailable`-style tests
     * never quiesce — production queries opt in, tests use 0.
     */
-  def stampGroup(timeoutMs: Long)(convId: String, turns: Iterator[ParsedTurn],
+  def stampGroup(timeoutMs: Long)(convId: String, turns: Iterator[StampedTurn],
       state: GroupState[ConvState]): Iterator[StampedTurn] = {
     if (state.hasTimedOut) {
       // abandoned conversation: reference behavior = buffer never drained
@@ -60,20 +61,17 @@ object StreamingPipeline {
       t.kind match {
         case "insert" | "update" | "delete" =>
           buf = t :: buf
-        case "commit" =>
+        case "commit" if t.xid.isDefined =>
           // drain: every buffered row event gets THIS commit's xid
-          buf.reverse.foreach { b =>
-            out += StampedTurn(b.conv_id, b.turn_idx, b.role, b.text, b.tool,
-              b.ts, b.kind, b.stmt, b.suppressed, b.xid, b.vals, t.xid)
-          }
+          out ++= buf.reverse.map(_.copy(txn_id = t.xid))
           buf = Nil
-          out += StampedTurn(t.conv_id, t.turn_idx, t.role, t.text, t.tool,
-            t.ts, t.kind, t.stmt, t.suppressed, t.xid, t.vals, t.xid)
+          out += t.copy(txn_id = t.xid)
+        case "commit" =>
+          out += t
         case _ =>
           // query / noise: stateless pass-through (txn_id 0 for queries,
           // conversion.go:25-40)
-          out += StampedTurn(t.conv_id, t.turn_idx, t.role, t.text, t.tool,
-            t.ts, t.kind, t.stmt, t.suppressed, t.xid, t.vals, Some(0L))
+          out += t.copy(txn_id = Some(0L))
       }
     }
     if (buf.isEmpty) state.remove()
@@ -84,29 +82,32 @@ object StreamingPipeline {
     out.result().iterator
   }
 
-  /** Streaming turns frame → stamped frame (parse + stateful txn stamp). */
-  def stamped(turns: DataFrame, timeoutMs: Long = 0L): DataFrame = {
-    val spark = turns.sparkSession
+  /** The streaming txn stamp over [[graft.operators.Parse.parseKind]]'s
+    * output (the frame `TxnStamp.stamp` takes). Emits the [[StampedTurn]]
+    * columns: the six turn columns, kind, xid and txn_id.
+    */
+  def stamp(parsedKind: DataFrame, timeoutMs: Long = 0L): DataFrame = {
+    val spark = parsedKind.sparkSession
     import spark.implicits._
     val timeoutKind =
       if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    Parse.parse(turns)
-      .selectExpr("conv_id", "turn_idx", "role", "text", "tool", "ts",
-        "kind", "stmt", "suppressed", "xid", "vals")
-      .as[ParsedTurn]
+    parsedKind
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
+        col("tool"), col("ts"), col("kind"), col("xid"),
+        lit(null).cast("long").as("txn_id"))
+      .as[StampedTurn]
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append, timeoutKind)(stampGroup(timeoutMs))
       .toDF()
   }
 
-  /** Full streaming routed stream: stamp → broadcast enrich → route. */
+  /** Full streaming routed stream: [[graft.Pipeline.composed]] under
+    * [[stamp]].
+    */
   def routedStream(turns: DataFrame, lookup: DataFrame,
-      cfg: PipelineConfig = PipelineConfig(), bufferTimeoutMs: Long = 0L): DataFrame = {
-    val st = stamped(turns, bufferTimeoutMs)
-    Route.includeFilters(Route.messages(Enrich.withLookup(st, lookup)),
-      cfg.includeRoles, cfg.includeTools)
-  }
+      cfg: PipelineConfig = PipelineConfig(), bufferTimeoutMs: Long = 0L): DataFrame =
+    Pipeline.composed(turns, lookup, cfg, stamp(_, bufferTimeoutMs))
 
   /** Streaming NDJSON sink — `streamCollector` (`consumer_chain.go:61-81`)
     * as a continuous query: each routed message serialized by

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.checkpoint.Sinks
 import graft.functions.CanonicalJson
 import graft.sources.Transcripts
@@ -356,12 +354,12 @@ class CanonicalJsonSpec extends SparkSpec {
       val docLines = render("r", "t", "e", 0L, 1L, "Insert", Seq(("building_no", "5")),
         Nil, Nil, "", null, pretty).count(_ == '\n') + 1
       // the batch sink and the streaming sink, over the same messages
-      val batchDir = Files.createTempDirectory("graft-ndjson-intlike").toString
+      val batchDir = tempDir("graft-ndjson-intlike")
       Sinks.writeNdjson(routedOf(msgs), batchDir, pretty)
-      val streamDir = Files.createTempDirectory("graft-ndjson-intlike-stream").toString
+      val streamDir = tempDir("graft-ndjson-intlike-stream")
       val input = MemoryStream[RoutedMsg]
       val q = StreamingPipeline.ndjsonSink(input.toDF(), streamDir,
-        Files.createTempDirectory("graft-ndjson-intlike-ck").toString, pretty)
+        tempDir("graft-ndjson-intlike-ck"), pretty)
       try { input.addData(msgs); q.processAllAvailable() } finally q.stop()
       for (dir <- Seq(batchDir, streamDir)) {
         val text = spark.read.text(dir).as[String].collect()

@@ -231,7 +231,7 @@ class GoldenMatrixSpec extends SparkSpec {
   // ----- K1: NDJSON file sink (streamCollector, consumer_chain.go:61-81) -
 
   test("K1: writeNdjson emits newline-delimited compact json.Marshal docs (CLI default mode)") {
-    val dir = Files.createTempDirectory("graft-ndjson").toString
+    val dir = tempDir("graft-ndjson")
     val routed = routedOf(f02).orderBy("turn_idx").coalesce(1)
     Sinks.writeNdjson(routed, dir, pretty = false)
     val part = Files.list(Paths.get(dir)).iterator.asScala
@@ -247,7 +247,7 @@ class GoldenMatrixSpec extends SparkSpec {
   test("S1b: NDJSON turns source round-trips the parquet-derived pipeline output") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-ndjson-src").toString
+    val dir = tempDir("graft-ndjson-src")
     mkTurns(f01ish).withColumn("ts",
       org.apache.spark.sql.functions.col("ts").cast("string"))
       .coalesce(1).write.mode("overwrite").json(dir)
@@ -268,7 +268,7 @@ class GoldenMatrixSpec extends SparkSpec {
     ("cs1", 3, "user", "EVENT commit xid=9", "search"))
 
   test("K1: pretty NDJSON stream matches the reference's -prettyprint concatenation") {
-    val dir = Files.createTempDirectory("graft-ndjson-pretty").toString
+    val dir = tempDir("graft-ndjson-pretty")
     val routed = routedOf(f05).orderBy("turn_idx").coalesce(1)
     Sinks.writeNdjson(routed, dir, pretty = true)
     val part = Files.list(Paths.get(dir)).iterator.asScala

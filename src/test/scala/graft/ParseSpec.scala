@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class ParseSpec extends SparkSpec {
 
   private def parseOne(text: String): Row =
-    Parse.parse(mkTurns(Seq(("c1", 1, "user", text, "search")))).collect().head
+    Parse.withVals(Parse.parseKind(mkTurns(Seq(("c1", 1, "user", text, "search"))))).collect().head
 
   test("insert line: kind, rows_declared, nested vals") {
     val r = parseOne("EVENT insert rows=2 vals=[1|ACME|x];[2|Sales|y]")
@@ -93,8 +93,18 @@ class ParseSpec extends SparkSpec {
     assert(r.getAs[scala.collection.Seq[scala.collection.Seq[String]]]("vals").head(1) == "héllo 世界 🚀")
   }
 
+  test("xid and rows= read their leading token; a malformed value is null, not a failure") {
+    def field(text: String, name: String) = Option(parseOne(text).getAs[Any](name))
+    assert(field("EVENT commit xid=42", "xid").contains(42L))
+    assert(field("EVENT commit xid=5 extra", "xid").contains(5L))
+    assert(field("EVENT commit xid=abc", "xid").isEmpty)
+    assert(field("EVENT commit", "xid").isEmpty)
+    assert(field("EVENT insert rows=x vals=[1|a]", "rows_declared").isEmpty)
+    assert(field("EVENT insert rows=1 vals=[1|a]", "rows_declared").contains(1))
+  }
+
   test("RFC3339 UTC event time (message.go:28)") {
-    val df = Parse.parse(mkTurns(Seq(("c1", 1, "user", "note x", ""))))
+    val df = mkTurns(Seq(("c1", 1, "user", "note x", "")))
       .select(Parse.eventTime(col("ts")).as("et"))
     assert(df.collect().head.getString(0) == "2017-04-13T06:34:30Z")
   }

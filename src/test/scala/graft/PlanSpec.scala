@@ -53,7 +53,7 @@ class PlanSpec extends SparkSpec {
 
   test("includeRoles pushes to the parquet scan, keeping commits (VERDICT r01 #6)") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-roleskip").toString
+    val dir = tempDir("graft-roleskip")
     Transcripts.synthetic(spark, 2000, 20).write.mode("overwrite").parquet(dir)
     val turns = spark.read.parquet(dir)
     val routed = Pipeline.routed(turns, Transcripts.lookup(spark),
@@ -71,7 +71,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sessionize composed with txn stamping shares the conv_id exchange (one shuffle)") {
-    val parsed = graft.operators.Parse.parse(Transcripts.synthetic(spark, 10000, 100))
+    val parsed = graft.operators.Parse.parseKind(Transcripts.synthetic(spark, 10000, 100))
     val composed = graft.operators.Sessionize.sessionize(
       graft.operators.TxnStamp.stamp(parsed), gapSeconds = 3600)
     val p = plan(composed)
@@ -81,7 +81,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("session_window bounds cost one shuffle and no window frames") {
-    val parsed = graft.operators.Parse.parse(Transcripts.synthetic(spark, 10000, 100))
+    val parsed = graft.operators.Parse.parseKind(Transcripts.synthetic(spark, 10000, 100))
     val df = graft.operators.Sessionize.sessionWindowBounds(parsed, "1 hour")
     val p = plan(df)
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(p).length
@@ -257,7 +257,7 @@ class PlanSpec extends SparkSpec {
     val routed = Pipeline.routed(
       Transcripts.synthetic(spark, 10000, 100),
       Transcripts.lookup(spark))
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-ndjson").toString
+    val dir = tempDir("graft-plan-ndjson")
     val p = firstPlanOf(graft.checkpoint.Sinks.writeNdjson(routed, dir))
     assert(p != null && p.contains("InsertIntoHadoopFsRelationCommand"),
       s"no write seen:\n$p")
@@ -268,7 +268,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("salted stamping plan avoids a full-width second exchange of the big frame") {
-    val parsed = graft.operators.Parse.parse(Transcripts.synthetic(spark, 10000, 100))
+    val parsed = graft.operators.Parse.parseKind(Transcripts.synthetic(spark, 10000, 100))
     val p = plan(graft.operators.TxnStamp.stampSalted(parsed, 1024))
     // big frame shuffles on (conv_id, salt_block); summary/backfill frames
     // are tiny. Assert the big window partitions by both keys.

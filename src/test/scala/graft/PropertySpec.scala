@@ -95,7 +95,7 @@ class PropertySpec extends SparkSpec {
         assert(filtered.map(key).toSet.subsetOf(routed.map(key).toSet))
 
         // salted stamping ≡ plain stamping
-        val parsed = Parse.parse(turns)
+        val parsed = Parse.parseKind(turns)
         def stamps(df: org.apache.spark.sql.DataFrame) =
           df.select("conv_id", "turn_idx", "txn_id").collect()
             .map(r => (r.getString(0), r.getInt(1)) -> Option(r.get(2))).toMap

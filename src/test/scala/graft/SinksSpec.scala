@@ -25,8 +25,8 @@ class SinksSpec extends SparkSpec {
     }
 
   test("fan-out write + resume equals single run (F11)") {
-    val tmpA = Files.createTempDirectory("graft-single").toString
-    val tmpB = Files.createTempDirectory("graft-resumed").toString
+    val tmpA = tempDir("graft-single")
+    val tmpB = tempDir("graft-resumed")
     val routed = routedSf001
 
     // single run
@@ -71,7 +71,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("manifest source field is JSON-escaped: quotes and backslashes round-trip") {
-    val out = Files.createTempDirectory("graft-escaped").toString
+    val out = tempDir("graft-escaped")
     val source = "s3a://bucket/\"quoted\" dir\\sub\\ <&>\tend"
     assert(Sinks.writeResumable(routedSf001, out, nBuckets = 2, source = source) == 2)
     val manifest = json.readTree(Paths.get(out, "_manifests", "bucket-0.json").toFile)
@@ -80,8 +80,8 @@ class SinksSpec extends SparkSpec {
   }
 
   test("resume redoes a bucket whose manifest is truncated, empty or foreign; ignores stray names") {
-    val single = Files.createTempDirectory("graft-single").toString
-    val resumed = Files.createTempDirectory("graft-damaged").toString
+    val single = tempDir("graft-single")
+    val resumed = tempDir("graft-damaged")
     val routed = routedSf001
     assert(Sinks.writeResumable(routed, single, nBuckets = 4, source = "sf0.001") == 4)
     assert(Sinks.writeResumable(routed, resumed, nBuckets = 4, source = "sf0.001") == 4)
@@ -106,7 +106,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("manifests go through the output URI's filesystem: a file:// outDir resumes") {
-    val dir = Files.createTempDirectory("graft-uri")
+    val dir = Paths.get(tempDir("graft-uri"))
     val out = s"file://$dir"
     assert(Sinks.writeResumable(routedSf001, out, nBuckets = 2, source = "sf0.001") == 2)
     assert(Files.isRegularFile(dir.resolve("_manifests").resolve("bucket-0.json")) &&
@@ -120,7 +120,7 @@ class SinksSpec extends SparkSpec {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val s = spark.newSession()
     s.conf.set(key, "static")
-    val out = Files.createTempDirectory("graft-overwrite-mode").toString
+    val out = tempDir("graft-overwrite-mode")
     assert(Sinks.writeResumable(Pipeline.routedFromEvents(s, "/root/testdata/sf0.001"),
       out, nBuckets = 2, source = "sf0.001") == 2)
     assert(s.conf.get(key) == "static")
@@ -137,7 +137,7 @@ class SinksSpec extends SparkSpec {
     }
     val cold = Seq(("cold", 1, "user", "EVENT insert rows=1 vals=[1|a|b]", "search"),
       ("cold", 2, "user", "EVENT commit xid=7", "search"))
-    val parsed = Parse.parse(mkTurns(hot ++ cold))
+    val parsed = Parse.parseKind(mkTurns(hot ++ cold))
     val plain = TxnStamp.stamp(parsed)
       .select("conv_id", "turn_idx", "txn_id").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> Option(r.get(2))).toMap

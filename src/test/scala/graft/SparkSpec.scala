@@ -1,12 +1,27 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs — one JVM-wide SparkSession. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   import java.sql.Timestamp
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh temp directory named `prefix…`, deleted recursively after the
+    * suite.
+    */
+  def tempDir(prefix: String): String = synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(graft.packs.Replay.deleteRecursively) finally super.afterAll()
 
   val t0 = Timestamp.valueOf("2017-04-13 06:34:30")
 

@@ -3,7 +3,8 @@ package graft
 import graft.model.Turn
 import graft.sources.Transcripts
 import graft.streaming.StreamingPipeline
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming parity: the stateful RowsEventBuffer semantics
@@ -14,6 +15,35 @@ class StreamingSpec extends SparkSpec {
 
   private def turn(c: String, i: Int, text: String, tool: String = "search") =
     Turn(c, i, "user", text, tool, t0)
+
+  private def key(r: Row) =
+    (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
+      r.getAs[String]("event_type"), r.getAs[Long]("txn_id"),
+      r.getAs[String]("row_repr"), r.getAs[String]("text"))
+
+  /** Routes `batches` through [[StreamingPipeline.routedStream]], one
+    * micro-batch each, and returns everything the query emitted.
+    */
+  private def routeStreaming(name: String, cfg: PipelineConfig,
+      batches: Seq[Turn]*): Array[Row] = {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Turn]
+    val q = StreamingPipeline.routedStream(input.toDF(), Transcripts.lookup(spark), cfg)
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    try {
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      spark.table(name).collect()
+    } finally q.stop()
+  }
+
+  private def routeBatch(cfg: PipelineConfig, turns: Seq[Turn]): Array[Row] = {
+    val s = spark
+    import s.implicits._
+    Pipeline.routed(turns.toDF(), Transcripts.lookup(spark), cfg).collect()
+  }
 
   test("cross-batch commit drains earlier-batch buffer (fixture-07 semantics)") {
     val s = spark
@@ -53,10 +83,6 @@ class StreamingSpec extends SparkSpec {
         ("c2", 1, "user", "EVENT query stmt=DROP TABLE x", "search"),
         ("c1", 3, "user", "EVENT commit xid=456", "search")))
       val batch = Pipeline.routed(allTurns, Transcripts.lookup(spark)).collect()
-      def key(r: org.apache.spark.sql.Row) =
-        (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
-          r.getAs[String]("event_type"), r.getAs[Long]("txn_id"),
-          r.getAs[String]("row_repr"), r.getAs[String]("text"))
       assert(afterB2.map(key).toSet == batch.map(key).toSet)
     } finally q.stop()
   }
@@ -65,8 +91,8 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-ndjson").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-stream-ck").toString
+    val outDir = tempDir("graft-stream-ndjson")
+    val ckDir = tempDir("graft-stream-ck")
 
     val input = MemoryStream[Turn]
     val routed = StreamingPipeline.routedStream(input.toDF(), Transcripts.lookup(spark))
@@ -88,9 +114,9 @@ class StreamingSpec extends SparkSpec {
 
   test("ndjsonSink restart from checkpoint is exactly-once, incl. cross-restart buffer drain (VERDICT r03 #4)") {
     val s = spark
-    val inDir = java.nio.file.Files.createTempDirectory("graft-eo-in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-eo-out").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-eo-ck").toString
+    val inDir = tempDir("graft-eo-in")
+    val outDir = tempDir("graft-eo-out")
+    val ckDir = tempDir("graft-eo-ck")
     val phase1 = Seq(
       ("c1", 1, "user", "EVENT insert rows=1 vals=[1|a|b]", "search"),
       ("c1", 2, "user", "EVENT insert rows=1 vals=[2|c|d]", "search"),
@@ -145,6 +171,67 @@ class StreamingSpec extends SparkSpec {
       input.addData(turn("c9", 1, "EVENT insert rows=1 vals=[1|a|b]"))
       q.processAllAvailable()
       assert(spark.table("routed_nodrain").isEmpty)
+    } finally q.stop()
+  }
+
+  test("a commit without a usable xid drains nothing and fails nothing, batch and streaming alike") {
+    val b1 = Seq(
+      turn("c1", 1, "EVENT insert rows=1 vals=[1|a|b]"),
+      turn("c1", 2, "EVENT commit"),
+      turn("c2", 1, "EVENT insert rows=1 vals=[2|c|d]"),
+      turn("c2", 2, "EVENT commit xid=abc"))
+    val b2 = Seq(
+      turn("c1", 3, "EVENT commit xid=5"),
+      turn("c2", 3, "EVENT commit xid=7 extra"),
+      turn("c3", 1, "EVENT insert rows=x vals=[3|e|f]"),
+      turn("c3", 2, "EVENT commit xid=8"))
+    val batch = routeBatch(PipelineConfig(), b1 ++ b2)
+    assert(batch.map(r => r.getAs[String]("conv_id") -> r.getAs[Long]("txn_id")).sorted.toSeq ==
+      Seq("c1" -> 5L, "c2" -> 7L, "c3" -> 8L))
+    val streamed = routeStreaming("routed_bad_xid", PipelineConfig(), b1, b2)
+    assert(streamed.map(key).sorted.toSeq == batch.map(key).sorted.toSeq)
+  }
+
+  test("include filters: streaming routes what batch routes; a filtered-out role's commit still drains") {
+    def t(c: String, i: Int, role: String, text: String, tool: String) = Turn(c, i, role, text, tool, t0)
+    val b1 = Seq(
+      t("c1", 1, "assistant", "EVENT insert rows=1 vals=[1|a|b]", "search"),
+      t("c1", 2, "assistant", "EVENT insert rows=1 vals=[2|c|d]", "calc"),
+      t("c1", 3, "user", "EVENT insert rows=1 vals=[3|e|f]", "search"),
+      t("c2", 1, "assistant", "EVENT delete rows=1 vals=[9|x|y]", "search"))
+    val b2 = Seq(
+      t("c1", 4, "user", "EVENT commit xid=11", "search"),
+      t("c1", 5, "assistant", "EVENT query stmt=DROP TABLE x", "search"),
+      t("c1", 6, "", "EVENT query stmt=CREATE TABLE y (id INT)", "search"),
+      t("c2", 2, "system", "EVENT commit xid=12", "db"))
+    val cfg = PipelineConfig(includeRoles = Seq("assistant"), includeTools = Seq("search"))
+    val batch = routeBatch(cfg, b1 ++ b2)
+    assert(batch.map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
+      r.getAs[String]("event_type"), r.getAs[Long]("txn_id"))).sorted.toSeq ==
+      Seq(("c1", 1, "Insert", 11L), ("c2", 1, "Delete", 12L)))
+    val streamed = routeStreaming("routed_filtered", cfg, b1, b2)
+    assert(streamed.map(key).sorted.toSeq == batch.map(key).sorted.toSeq)
+  }
+
+  test("the stamp's shuffle and state carry only the dispatch columns") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Turn]
+    val q = StreamingPipeline.routedStream(input.toDF(), Transcripts.lookup(spark))
+      .writeStream.format("memory").queryName("routed_dispatch")
+      .outputMode(OutputMode.Append).start()
+    try {
+      input.addData(turn("c1", 1, "EVENT insert rows=1 vals=[1|a|b]"),
+        turn("c1", 2, "EVENT commit xid=3"))
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val stateful = plan.collect { case p if p.nodeName == "FlatMapGroupsWithState" => p }
+      assert(stateful.length == 1, s"one stateful stamp expected:\n$plan")
+      val cols = stateful.head.children.flatMap(_.output.map(_.name))
+      assert(Seq("kind", "xid").forall(cols.contains), cols)
+      assert(!cols.exists(Set("stmt", "suppressed", "rows_declared", "vals")),
+        s"payload columns reach the stamp: ${cols.mkString(",")}")
     } finally q.stop()
   }
 
