@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * — the same `SparkSessionExtensions` mechanism Iceberg and Delta use —
   * so SQL-text users (spark-sql, Thrift server, notebooks) get the
   * compiled hot-path functions. The Column APIs (`ParseVals(col)`,
-  * `MapRows(names, vals)`, …) need no registration at all. Injection
+  * `CosineSim(a, b)`, …) need no registration at all. Injection
   * happens at session build, before any query parses, and applies to
   * every session cloned from the builder.
   *
@@ -38,7 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject(CosineSim.Name, 2 to 2, es => CosineSim(es(0), es(1)))
     inject(GoJsonEscape.Name, 1 to 1, es => GoJsonEscape(es(0)))
     inject(ParseVals.Name, 1 to 1, es => ParseVals(es(0)))
-    inject(MapRows.Name, 2 to 2, es => MapRows(es(0), es(1)))
     inject(MinHashSig.Name, 1 to 1, es => MinHashSig(es(0)))
     inject(SimHashSig.Name, 1 to 1, es => SimHashSig(es(0)))
     inject(ShingleSetName, 1 to 1, es => ShingleSet(es(0)))

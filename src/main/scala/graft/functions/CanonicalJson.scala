@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - struct fields in declaration order (Header, Type, Data / OldData,
   *    NewData / Query — `messages/message.go:59-96`)
   *  - map keys alphabetical (Go map marshal order; the entries arrive
-  *    key-sorted from [[RouteMsgs]] via [[MapRows.mapPhysicalRow]])
+  *    key-sorted from [[graft.operators.Enrich.rowEntries]])
   *  - Go's HTML-safe escaping: `<` `>` `&` → < > &;
   *    control chars → \t \n \r or \u00xx; UTF-8 passes through
   *  - integer-looking values render as JSON numbers (the binlog decoder

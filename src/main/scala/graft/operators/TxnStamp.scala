@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * keeping their own positions — `data/fixtures/07.json:17-18,34-35`).
   *
   * Batch semantics: txn_id(turn) = xid of the first commit at or after the
-  * turn within its conversation. Row events with no following commit were
+  * turn within its conversation, skipping commits without a usable xid; a
+  * commit itself carries its own xid (null when it has none), as the
+  * streaming buffer stamps it. Row events with no following commit were
   * never drained by the reference (buffer discarded at EOF) — they carry
   * txn_id null here and are dropped-with-count downstream.
   *
@@ -34,9 +36,15 @@ object TxnStamp {
   def stamp(parsed: DataFrame): DataFrame = {
     val w = Window.partitionBy("conv_id").orderBy(col("turn_idx").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parsed.withColumn("txn_id",
-      last(when(col("kind") === "commit", col("xid")), ignoreNulls = true).over(w))
+    parsed.withColumn("txn_id", ownXidOnCommit(
+      last(when(col("kind") === "commit", col("xid")), ignoreNulls = true).over(w)))
   }
+
+  /** A commit's txn_id is its own xid, even a null one: the running frame
+    * would otherwise hand an xid-less commit the NEXT commit's xid.
+    */
+  private def ownXidOnCommit(txnId: Column): Column =
+    when(col("kind") === "commit", col("xid")).otherwise(txnId)
 
   /** Skew-safe salted variant — semantically identical to [[stamp]] (tested
     * + oracle-checked), but a hot conversation no longer serializes into one
@@ -103,7 +111,8 @@ object TxnStamp {
     // partitioning and skips the sort an SMJ would add.
     inBlock
       .join(domainFill.hint("shuffle_hash"), Seq("conv_id", "salt_block"), "left")
-      .withColumn("txn_id", coalesce(col("txn_in_block"), col("next_xid")))
+      .withColumn("txn_id",
+        ownXidOnCommit(coalesce(col("txn_in_block"), col("next_xid"))))
       .drop("txn_in_block", "next_xid", "salt_block")
   }
 }

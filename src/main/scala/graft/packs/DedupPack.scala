@@ -112,15 +112,9 @@ object DedupPack extends QueryPack {
         .schema(docs(s, dir).schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
-      Replay.withCheckpointDir("graft-dse-ckpt") { ckpt =>
-        val q = graft.streaming.StreamingPipeline.dedupStream(input)
-          .writeStream.format("memory").queryName("dedup_stream_exact")
-          .option("checkpointLocation", ckpt)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table("dedup_stream_exact")
+      Replay.withReplayDir("graft-dse-ckpt") { ckpt =>
+        Replay.drainToMemory(graft.streaming.StreamingPipeline.dedupStream(input),
+          "dedup_stream_exact", ckpt)
       }
     }),
     // bounded-state streaming dedup — the mode a real unbounded ingest
@@ -175,13 +169,7 @@ object DedupPack extends QueryPack {
           .parquet(replayDir)
         val out = graft.streaming.StreamingPipeline.dedupStream(
           input, "event_ts", withinWatermark = Some("10 minutes"))
-        val q = out.writeStream.format("memory").queryName("dedup_stream_wm")
-          .option("checkpointLocation", Replay.checkpointIn(replayDir))
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table("dedup_stream_wm")
+        Replay.drainToMemory(out, "dedup_stream_wm", Replay.checkpointIn(replayDir))
       }
     })
   )

@@ -1,6 +1,7 @@
 package graft.packs
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Shared harness plumbing for the streaming-evidence queries: replay a
   * deterministic fixture through a parquet FILE SOURCE (fully distributed —
@@ -41,11 +42,19 @@ object Replay {
     */
   def checkpointIn(replayDir: String): String = s"$replayDir/_ckpt"
 
-  /** Standalone fast checkpoint dir (for streams whose source dir is
-    * read-only, e.g. the sf-dir document replays): caller-scoped cleanup.
+  /** Run `stream` to completion into the memory sink `name`: one
+    * Append-mode query under `Trigger.AvailableNow`, checkpointed at
+    * `checkpoint`. Returns the sink table, read in the stream's session.
     */
-  def withCheckpointDir[T](prefix: String)(f: String => T): T =
-    withReplayDir(prefix)(f)
+  def drainToMemory(stream: DataFrame, name: String, checkpoint: String): DataFrame = {
+    val q = stream.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    stream.sparkSession.table(name)
+  }
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._

@@ -20,6 +20,14 @@ object TranscriptPack extends QueryPack {
 
   // ---- shared DuckDB oracle fragments (mirror Parse/Enrich/TxnStamp) ----
 
+  /** DuckDB mirror of [[Parse]]'s leading-token field read: the text after
+    * the first `marker` up to the next space, TRY_CAST to `to` — null when
+    * the marker is absent or the token is not a number (`xid=abc`, `xid=5x`).
+    */
+  private def duckLeadingToken(marker: String, to: String): String =
+    s"""CASE WHEN strpos(text, '$marker') > 0
+           THEN TRY_CAST(split_part(substr(text, strpos(text, '$marker') + ${marker.length}), ' ', 1) AS $to) END"""
+
   private val duckParsed = """parsed AS (
     SELECT *,
       regexp_extract(text, '^EVENT (insert|update|delete|query|commit)\b', 1) AS kind,
@@ -28,9 +36,9 @@ object TranscriptPack extends QueryPack {
         AND (upper(trim(regexp_extract(text, 'stmt=(.*)$', 1))) = 'BEGIN'
              OR starts_with(upper(trim(regexp_extract(text, 'stmt=(.*)$', 1))), 'SAVEPOINT'))) AS suppressed,
       CASE WHEN regexp_extract(text, '^EVENT (insert|update|delete|query|commit)\b', 1) = 'commit'
-           THEN CAST(regexp_extract(text, 'xid=(\d+)', 1) AS BIGINT) END AS xid,
+           THEN """ + duckLeadingToken("xid=", "BIGINT") + """ END AS xid,
       CASE WHEN regexp_extract(text, '^EVENT (insert|update|delete|query|commit)\b', 1) IN ('insert','update','delete')
-           THEN CAST(regexp_extract(text, 'rows=(\d+)', 1) AS INT) END AS rows_declared,
+           THEN """ + duckLeadingToken("rows=", "INT") + """ END AS rows_declared,
       CASE WHEN regexp_extract(text, '^EVENT (insert|update|delete|query|commit)\b', 1) IN ('insert','update','delete')
            THEN list_transform(string_split(regexp_extract(text, 'vals=(.*)$', 1), ';'),
                                g -> string_split(regexp_replace(g, '^\[|\]$', '', 'g'), '|'))
@@ -38,9 +46,10 @@ object TranscriptPack extends QueryPack {
     FROM turns)"""
 
   private val duckStamped = """stamped AS (
-    SELECT *, first_value(CASE WHEN kind = 'commit' THEN xid END IGNORE NULLS)
-      OVER (PARTITION BY conv_id ORDER BY turn_idx
-            ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS txn_id
+    SELECT *, CASE WHEN kind = 'commit' THEN xid
+      ELSE first_value(CASE WHEN kind = 'commit' THEN xid END IGNORE NULLS)
+        OVER (PARTITION BY conv_id ORDER BY turn_idx
+              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) END AS txn_id
     FROM parsed)"""
 
   private val duckEnriched = """enriched AS (
@@ -51,7 +60,7 @@ object TranscriptPack extends QueryPack {
   /** DuckDB expression: canonical "k=v,..." repr of one physical row `v`
     * against `field_names`. Key-FIRST sort via struct list_sort (struct
     * comparison is field-order lexicographic), mirroring
-    * [[Enrich.rowRepr]]/MapRows: sorting the concatenated "k=v" string
+    * [[Enrich.rowEntries]]: sorting the concatenated "k=v" string
     * diverges when a key prefixes another key (ADVICE r01).
     */
   private def duckRepr(v: String): String =
@@ -101,6 +110,16 @@ object TranscriptPack extends QueryPack {
                 AND len(vals) >= 2 AND len(vals) % 2 = 0 THEN len(vals) // 2
            ELSE 0 END AS n_messages
     FROM enriched)"""
+
+  /** The sf-dir turns written to `replayDir` and streamed back through a
+    * parquet file source in session `s`.
+    */
+  private def turnsStream(s: SparkSession, dir: String, replayDir: String): DataFrame = {
+    turns(s, dir)
+      .selectExpr("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .write.mode("overwrite").parquet(replayDir)
+    s.readStream.schema(graft.model.Model.turnsSchema).parquet(replayDir)
+  }
 
   private def withTurns(body: String): String =
     s"${Transcripts.turnsCte} $body"
@@ -220,20 +239,10 @@ object TranscriptPack extends QueryPack {
       val s = s0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "8")
       Replay.withReplayDir("graft-g2-replay") { replayDir =>
-        turns(s, dir)
-          .selectExpr("conv_id", "turn_idx", "role", "text", "tool", "ts")
-          .write.mode("overwrite").parquet(replayDir)
-        val input = s.readStream.schema(graft.model.Model.turnsSchema)
-          .parquet(replayDir)
+        val input = turnsStream(s, dir, replayDir)
         val stamped = graft.streaming.StreamingPipeline.stamp(Parse.parseKind(input))
           .select(col("conv_id"), col("turn_idx"), col("kind"), col("txn_id"))
-        val q = stamped.writeStream.format("memory").queryName("g2_stream_oracle")
-          .option("checkpointLocation", Replay.checkpointIn(replayDir))
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table("g2_stream_oracle")
+        Replay.drainToMemory(stamped, "g2_stream_oracle", Replay.checkpointIn(replayDir))
       }
     }),
 
@@ -249,23 +258,13 @@ object TranscriptPack extends QueryPack {
       // (measured: 3.3 s at 8 partitions, 2.7 s at 4, same rows)
       s.conf.set("spark.sql.shuffle.partitions", "4")
       Replay.withReplayDir("graft-k4-replay") { replayDir =>
-        turns(s, dir)
-          .selectExpr("conv_id", "turn_idx", "role", "text", "tool", "ts")
-          .write.mode("overwrite").parquet(replayDir)
-        val input = s.readStream.schema(graft.model.Model.turnsSchema)
-          .parquet(replayDir)
+        val input = turnsStream(s, dir, replayDir)
         val routed = graft.streaming.StreamingPipeline.routedStream(
           input, Transcripts.lookup(s))
         val counts = graft.streaming.StreamingPipeline.windowedSinkCounts(routed)
           .select(Parse.eventTime(col("window.start")).as("win_start"),
             col("role"), col("tool"), col("event_type"), col("n"))
-        val q = counts.writeStream.format("memory").queryName("k4_windowed")
-          .option("checkpointLocation", Replay.checkpointIn(replayDir))
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table("k4_windowed")
+        Replay.drainToMemory(counts, "k4_windowed", Replay.checkpointIn(replayDir))
       }
     }),
 
@@ -309,24 +308,14 @@ object TranscriptPack extends QueryPack {
       val s = s0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "8")
       Replay.withReplayDir("graft-x4-replay") { replayDir =>
-        turns(s, dir)
-          .selectExpr("conv_id", "turn_idx", "role", "text", "tool", "ts")
-          .write.mode("overwrite").parquet(replayDir)
-        val input = s.readStream.schema(graft.model.Model.turnsSchema)
-          .parquet(replayDir)
+        val input = turnsStream(s, dir, replayDir)
         val sess = graft.streaming.StreamingPipeline
           .sessionBoundsStream(input, "1 hour", "10 minutes")
           .select(col("conv_id"),
             Parse.eventTime(col("sess_start")).as("sess_start"),
             Parse.eventTime(col("sess_end")).as("sess_end"),
             col("first_turn"), col("last_turn"), col("n_turns"))
-        val q = sess.writeStream.format("memory").queryName("x4_session_stream")
-          .option("checkpointLocation", Replay.checkpointIn(replayDir))
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table("x4_session_stream")
+        Replay.drainToMemory(sess, "x4_session_stream", Replay.checkpointIn(replayDir))
       }
     })
   )

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * marks `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`).
   *
   * Why it exists (ADVICE r03): graft's custom Catalyst expressions
-  * (CosineSim, GoJsonEscape, MapRows, MinHashSig, ParseVals, RouteMsgs,
-  * ShingleSet, SimHashSig, SrpBucket) expose a Column API. Routing that
+  * (CosineSim, GoJsonEscape, MinHashSig, ParseVals, ShingleSet,
+  * SimHashSig, SrpBucket) expose a Column API. Routing that
   * API through the session function registry made every public entry
   * point depend on the name being registered first — external callers hit
   * an unresolved-function analysis error. Building the Column directly

@@ -32,13 +32,14 @@ class EnrichSpec extends SparkSpec {
     val (r, n) = repr(Seq("a", "a1"), Seq("x", "y"))
     assert(r == "a=x,a1=y")
     assert(n == "")
-    // and MapRows (the fused production path) agrees
+    // and the routed row_repr (the production path) agrees
     val s = spark
     import s.implicits._
-    val viaMapRows = Seq((Seq("a", "a1"), Seq(Seq("x", "y")))).toDF("names", "vals")
-      .select(graft.functions.MapRows(col("names"), col("vals")).as("m"))
-      .selectExpr("m[0].repr").collect().head.getString(0)
-    assert(viaMapRows == "a=x,a1=y")
+    val lookup = Seq(("user", "prefixed", Seq("a", "a1"))).toDF("role", "tool", "field_names")
+    val routed = Pipeline.routed(mkTurns(Seq(
+      ("c1", 1, "user", "EVENT insert rows=1 vals=[x|y]", "prefixed"),
+      ("c1", 2, "user", "EVENT commit xid=1", "prefixed"))), lookup)
+    assert(routed.select("row_repr").collect().map(_.getString(0)).toSeq == Seq("a=x,a1=y"))
   }
 
   test("row longer: ALL keys (unknown_i) + exact notice (row_data.go:46)") {

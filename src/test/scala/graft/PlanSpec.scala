@@ -31,6 +31,21 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), "lookup join must be BHJ")
   }
 
+  test("route: one Generate, and each side's entries are sorted once") {
+    val routed = Pipeline.routed(
+      Transcripts.synthetic(spark, 10000, 100),
+      Transcripts.lookup(spark))
+    val sp = routed.queryExecution.sparkPlan
+    val generates = sp.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    assert(generates.size == 1, s"expected one Generate, plan:\n$sp")
+    // Data, OldData and NewData are each sorted once: the repr projection
+    // reads the entries columns instead of re-mapping the rows
+    val sorts = sp.flatMap(_.expressions.flatMap(_.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.SortArray => a
+    }))
+    assert(sorts.size == 3, s"expected 3 sort_array, plan:\n$sp")
+  }
+
   test("q1 scan prunes to the referenced columns and stays in codegen") {
     val df = Relational.q1(spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"))
     df.collect() // materialize so AQE finalizes the physical plan

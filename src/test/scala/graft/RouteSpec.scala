@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Agg, Route, TxnStamp, Parse}
 import graft.sources.Transcripts
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Routing semantics — message multiplicity, txn stamping, filters.
@@ -135,48 +135,81 @@ class RouteSpec extends SparkSpec {
     assert(out.length == 1 && out.head.getAs[String]("text") == weird)
   }
 
-  test("fused RouteMsgs ≡ the legacy CASE/transform/element_at message tree") {
-    // the expression tree RouteMsgs replaced, rebuilt verbatim — every
-    // branch (query kept/suppressed, insert multi-row, delete, update
+  /** One routed message, as the reference rules below and [[Route.messages]]
+    * both produce it; entries are `(k, v)` pairs.
+    */
+  private case class Msg(conv: String, turn: Int, tool: String, eventType: String,
+      txnId: Option[Long], rowRepr: String, oldRepr: String, newRepr: String,
+      notice: String, newNotice: String, query: String,
+      rowEntries: Option[Seq[(String, String)]],
+      oldEntries: Option[Seq[(String, String)]],
+      newEntries: Option[Seq[(String, String)]])
+
+  /** The message rules of `conversion.go` + `row_data.go:8-54` in plain
+    * Scala, one enriched turn at a time.
+    */
+  private def referenceMessages(r: Row): Seq[Msg] = {
+    import graft.model.Model
+    def entries(names: Seq[String], row: Seq[String]): Seq[(String, String)] = {
+      val keys = if (row.size != names.size) row.indices.map(i => s"(unknown_$i)") else names
+      keys.zip(row).sortBy(_._1)
+    }
+    def repr(e: Seq[(String, String)]) = e.map { case (k, v) => s"$k=$v" }.mkString(",")
+    def notice(names: Seq[String], row: Seq[String]) =
+      if (row.size > names.size) Model.NoticeRowLonger
+      else if (row.size < names.size) Model.NoticeRowShorter
+      else ""
+    val conv = r.getAs[String]("conv_id")
+    val turn = r.getAs[Int]("turn_idx")
+    val tool = r.getAs[String]("tool")
+    val kind = r.getAs[String]("kind")
+    val names = Option(r.getAs[collection.Seq[String]]("field_names")).map(_.toSeq).orNull
+    val vals = Option(r.getAs[collection.Seq[collection.Seq[String]]]("vals"))
+      .map(_.map(_.toSeq).toSeq)
+    val txn = Option(r.get(r.fieldIndex("txn_id"))).map(_.asInstanceOf[Long])
+    val committed = r.getAs[Boolean]("matched") && txn.isDefined
+    kind match {
+      case "query" if !r.getAs[Boolean]("suppressed") =>
+        Seq(Msg(conv, turn, Model.UnknownTable, "Query", Some(0L), null, null, null,
+          "", null, r.getAs[String]("stmt"), None, None, None))
+      case "insert" | "delete" if committed =>
+        vals.getOrElse(Nil).map { row =>
+          val e = entries(names, row)
+          Msg(conv, turn, tool, kind.capitalize, txn, repr(e), null, null,
+            notice(names, row), null, null, Some(e), None, None)
+        }
+      case "update" if committed && vals.exists(v => v.size >= 2 && v.size % 2 == 0) =>
+        vals.get.grouped(2).toSeq.map { case Seq(o, n) =>
+          val (oe, ne) = (entries(names, o), entries(names, n))
+          Msg(conv, turn, tool, "Update", txn, null, repr(oe), repr(ne),
+            notice(names, o), notice(names, n), null, None, Some(oe), Some(ne))
+        }
+      case _ => Nil
+    }
+  }
+
+  private def routedMessage(r: Row): Msg = {
+    def entries(c: String) = Option(r.getAs[collection.Seq[Row]](c))
+      .map(_.map(e => e.getString(0) -> e.getString(1)).toSeq)
+    Msg(r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"), r.getAs[String]("tool"),
+      r.getAs[String]("event_type"),
+      Option(r.get(r.fieldIndex("txn_id"))).map(_.asInstanceOf[Long]),
+      r.getAs[String]("row_repr"), r.getAs[String]("old_repr"), r.getAs[String]("new_repr"),
+      r.getAs[String]("mapping_notice"), r.getAs[String]("new_mapping_notice"),
+      r.getAs[String]("query"),
+      entries("row_entries"), entries("old_entries"), entries("new_entries"))
+  }
+
+  test("Route.messages ≡ a plain-Scala reference of the message rules") {
+    // every branch — query kept/suppressed, insert multi-row, delete, update
     // pairing incl. per-side notices, odd-update quarantine, mismatch
-    // renames, unmapped, uncommitted, noise) exercised by the fixture
-    val entriesType = "array<struct<k:string,v:string>>"
-    val nullStr = lit(null).cast("string")
-    val nullEntries = lit(null).cast(entriesType)
-    def msgStruct(et: Column, rr: Column, or: Column, nr: Column, no: Column,
-        nn: Column, q: Column, re: Column, oe: Column, ne: Column): Column =
-      struct(et.as("event_type"), rr.as("row_repr"), or.as("old_repr"),
-        nr.as("new_repr"), no.as("mapping_notice"), nn.as("new_mapping_notice"),
-        q.as("query"), re.as("row_entries"), oe.as("old_entries"),
-        ne.as("new_entries"))
-    val names = col("field_names")
-    val vals = col("vals")
-    val committed = col("matched") && col("txn_id").isNotNull
-    val queryKept = (col("kind") === "query") && !col("suppressed")
-    val insertDelete = col("kind").isin("insert", "delete") && committed
-    val updateOk = (col("kind") === "update") && committed &&
-      (size(vals) >= 2) && (size(vals) % 2 === 0)
-    val mapped = graft.functions.MapRows(names, vals)
-    val legacy = when(queryKept, array(msgStruct(lit("Query"), nullStr,
-        nullStr, nullStr, lit(""), nullStr, col("stmt"), nullEntries,
-        nullEntries, nullEntries)))
-      .when(insertDelete, transform(mapped, m => msgStruct(
-        when(col("kind") === "insert", "Insert").otherwise("Delete"),
-        m.getField("repr"), nullStr, nullStr, m.getField("notice"), nullStr,
-        nullStr, m.getField("entries"), nullEntries, nullEntries)))
-      .when(updateOk, transform(
-        sequence(lit(0), (size(vals) / 2).cast("int") - 1),
-        i => msgStruct(lit("Update"), nullStr,
-          element_at(mapped, i * 2 + 1).getField("repr"),
-          element_at(mapped, i * 2 + 2).getField("repr"),
-          element_at(mapped, i * 2 + 1).getField("notice"),
-          element_at(mapped, i * 2 + 2).getField("notice"),
-          nullStr, nullEntries,
-          element_at(mapped, i * 2 + 1).getField("entries"),
-          element_at(mapped, i * 2 + 2).getField("entries"))))
-      .otherwise(array().cast(s"array<struct<event_type:string,row_repr:string,old_repr:string,new_repr:string,mapping_notice:string,new_mapping_notice:string,query:string,row_entries:$entriesType,old_entries:$entriesType,new_entries:$entriesType>>"))
-    val fused = graft.functions.RouteMsgs(col("kind"), col("suppressed"),
-      col("stmt"), names, vals, committed)
+    // renames, unmapped, uncommitted, noise — plus a prefix-key pair
+    // (a vs a1) and an 11-value mismatch row where (unknown_10) sorts
+    // before (unknown_2)
+    val s = spark
+    import s.implicits._
+    val lookup = Transcripts.lookup(spark).union(
+      Seq(("user", "prefixed", Seq("a1", "a", "b"))).toDF("role", "tool", "field_names"))
     val enriched = Pipeline.enriched(mkTurns(Seq(
       ("c1", 1, "user", "EVENT insert rows=2 vals=[1|a|b];[2|c|d]", "search"),
       ("c1", 2, "user", "EVENT insert rows=1 vals=[1|too|many|cols]", "search"),
@@ -188,27 +221,53 @@ class RouteSpec extends SparkSpec {
       ("c1", 8, "user", "EVENT query stmt=BEGIN", "search"),
       ("c1", 9, "user", "EVENT query stmt= SAVEPOINT sp1", "search"),
       ("c1", 10, "user", "note noise", "search"),
-      ("c1", 11, "user", "EVENT commit xid=77", "search"),
-      ("c1", 12, "user", "EVENT insert rows=1 vals=[9|un|committed]", "search"),
+      ("c1", 11, "user", "EVENT insert rows=1 vals=[x|y|z]", "prefixed"),
+      ("c1", 12, "user", "EVENT update rows=2 vals=[x|y|z];[x2|y2|z2]", "prefixed"),
+      ("c1", 13, "user", "EVENT insert rows=1 vals=[v0|v1|v2|v3|v4|v5|v6|v7|v8|v9|v10]", "search"),
+      ("c1", 14, "user", "EVENT commit xid=77", "search"),
+      ("c1", 15, "user", "EVENT insert rows=1 vals=[9|un|committed]", "search"),
       ("c2", 1, "user", "EVENT insert rows=1 vals=[1|un|mapped]", "nosuchtool"),
-      ("c2", 2, "user", "EVENT commit xid=78", "search"))),
-      Transcripts.lookup(spark))
-    val both = enriched.select(col("conv_id"), col("turn_idx"),
-      legacy.as("legacy"), fused.as("fused"))
-    val diff = both.filter(
-      !(col("legacy") <=> col("fused"))).collect()
-    assert(diff.isEmpty, s"RouteMsgs diverges from legacy tree: ${diff.mkString("\n")}")
+      ("c2", 2, "user", "EVENT commit xid=78", "search"))), lookup)
+    val expected = enriched.collect().toSeq.flatMap(referenceMessages).sortBy(_.toString)
+    val routed = Route.messages(enriched).collect().toSeq.map(routedMessage).sortBy(_.toString)
+    assert(routed == expected,
+      s"Route.messages diverges from the reference:\n${routed.diff(expected).mkString("\n")}" +
+        s"\nmissing:\n${expected.diff(routed).mkString("\n")}")
+    val byTurn = routed.groupBy(_.turn)
+    assert(byTurn(11).map(_.rowRepr) == Seq("a=y,a1=x,b=z"))
+    assert(byTurn(12).map(m => (m.oldRepr, m.newRepr)) == Seq(("a=y,a1=x,b=z", "a=y2,a1=x2,b=z2")))
+    assert(byTurn(13).head.rowRepr.startsWith(
+      "(unknown_0)=v0,(unknown_1)=v1,(unknown_10)=v10,(unknown_2)=v2"), byTurn(13))
+    assert(routed.size == 10, routed.mkString("\n"))
   }
 
-  test("RouteMsgs rejects a mis-typed vals at analysis, before any row runs") {
+  test("Route.messages rejects a mis-typed vals at analysis, before any row runs") {
     // vals must be array<array<string>>: a flat array<string> fails the
-    // plan instead of throwing ClassCastException per row
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.range(1).select(graft.functions.RouteMsgs(lit("insert"), lit(false),
-        lit(""), array(lit("id")), array(lit("1")), lit(true)))
-    }
+    // plan when the route frame is built, not per row in a job
+    val bad = spark.range(1).select(lit("c1").as("conv_id"), lit(1).as("turn_idx"),
+      lit("user").as("role"), lit("search").as("tool"), lit("x").as("text"),
+      lit(t0).as("ts"), lit("insert").as("kind"), lit(false).as("suppressed"),
+      lit("").as("stmt"), array(lit("id")).as("field_names"),
+      array(lit("1")).as("vals"), lit(true).as("matched"), lit(1L).as("txn_id"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](Route.messages(bad))
     assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
-    assert(e.getMessage.contains("ARRAY<ARRAY<STRING>>"), e.getMessage)
+  }
+
+  test("routed schema: field names, types and nullability") {
+    import org.apache.spark.sql.types._
+    val entries = ArrayType(StructType(Seq(
+      StructField("k", StringType), StructField("v", StringType))), containsNull = false)
+    val expected = StructType(Seq(
+      "conv_id" -> StringType, "turn_idx" -> IntegerType, "role" -> StringType,
+      "tool" -> StringType, "event_type" -> StringType, "event_time" -> StringType,
+      "position" -> LongType, "txn_id" -> LongType, "row_repr" -> StringType,
+      "old_repr" -> StringType, "new_repr" -> StringType,
+      "mapping_notice" -> StringType, "new_mapping_notice" -> StringType,
+      "query" -> StringType, "row_entries" -> entries, "old_entries" -> entries,
+      "new_entries" -> entries, "text" -> StringType).map { case (n, t) =>
+      StructField(n, t, nullable = n != "turn_idx" && n != "position")
+    })
+    assert(routed(fixture07).schema == expected)
   }
 
   test("conservation ledger: every turn accounted (F09/A1)") {

@@ -190,6 +190,21 @@ class StreamingSpec extends SparkSpec {
       Seq("c1" -> 5L, "c2" -> 7L, "c3" -> 8L))
     val streamed = routeStreaming("routed_bad_xid", PipelineConfig(), b1, b2)
     assert(streamed.map(key).sorted.toSeq == batch.map(key).sorted.toSeq)
+    // the stamped commits agree too: an xid-less commit keeps a null txn_id
+    // rather than taking the next commit's xid
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val parsed = graft.operators.Parse.parseKind((b1 ++ b2).toDF())
+    def commitTxns(stamped: org.apache.spark.sql.DataFrame) =
+      stamped.filter(col("kind") === "commit").select("conv_id", "turn_idx", "txn_id")
+        .collect().map(r => (r.getString(0), r.getInt(1),
+          Option(r.get(2)).map(_.asInstanceOf[Long]))).sorted.toSeq
+    val viaStamp = commitTxns(graft.operators.TxnStamp.stamp(parsed))
+    assert(viaStamp == Seq(("c1", 2, None), ("c1", 3, Some(5L)), ("c2", 2, None),
+      ("c2", 3, Some(7L)), ("c3", 2, Some(8L))))
+    assert(commitTxns(graft.operators.TxnStamp.stampSalted(parsed, blockSize = 1)) == viaStamp)
+    assert(commitTxns(StreamingPipeline.stamp(parsed)) == viaStamp)
   }
 
   test("include filters: streaming routes what batch routes; a filtered-out role's commit still drains") {
