@@ -232,21 +232,25 @@ object Curate {
     * (`cur_decontaminate_bloom` grades both properties; measured FP rate
     * recorded in BASELINE.md).
     */
-  def decontaminateBloom(docs: DataFrame, salt: String = "graft-bench",
-      estItems: Long = 1L << 20, fpp: Double = 1e-4): DataFrame =
-    decontaminateBloomShingled(shingled(docs, salt), estItems, fpp)
+  def decontaminateBloom(docs: DataFrame, salt: String = "graft-bench"): DataFrame =
+    decontaminateBloomShingled(shingled(docs, salt))
+
+  /** The bloom filter's sizing: expected benchmark shingles and false
+    * positive rate.
+    */
+  private val BloomItems = 1L << 20
+  private val BloomFpp = 1e-4
 
   /** [[decontaminateBloom]] over a pre-shingled frame. */
-  def decontaminateBloomShingled(shingled: DataFrame,
-      estItems: Long = 1L << 20, fpp: Double = 1e-4): DataFrame = {
+  def decontaminateBloomShingled(shingled: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(estItems, fpp)
+    val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(BloomItems, BloomFpp)
     val bloomBytes = shingled.filter(col("is_bench"))
       .select(explode(col("shs")).as("sh")).distinct()
       .agg(column(new BloomFilterAggregate(expression(xxhash64(col("sh"))),
-        expression(lit(estItems)), expression(lit(numBits)))
+        expression(lit(BloomItems)), expression(lit(numBits)))
         .toAggregateExpression()).as("bf"))
       .head.getAs[Array[Byte]](0)
     require(bloomBytes != null, "benchmark set is empty — nothing to build a bloom from")

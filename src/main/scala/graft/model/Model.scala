@@ -29,16 +29,6 @@ object Model {
     val Query = "Query"
   }
 
-  /** Parse-stage `kind` values (pre-routing, lower-case grammar tokens). */
-  object Kind {
-    val Insert = "insert"
-    val Update = "update"
-    val Delete = "delete"
-    val Query = "query"
-    val Commit = "commit"
-    val Noise = "" // no EVENT prefix -> dropped silently but counted
-  }
-
   /** Exact mismatch notices — byte-for-byte from the reference
     * (`parser/conversion/row_data.go:46,50`).
     */
@@ -59,26 +49,4 @@ case class Turn(
     text: String,
     tool: String,
     ts: java.sql.Timestamp
-)
-
-/** A routed output message — the reference's Message envelope
-  * (`message.go:16-96`) flattened into one Dataset row; `event_type`
-  * discriminates Insert/Update/Delete/Query.
-  */
-case class RoutedEvent(
-    conv_id: String,
-    turn_idx: Int,
-    role: String, // header.Schema analog
-    tool: String, // header.Table analog ("(unknown)" for queries)
-    event_type: String, // Insert | Update | Delete | Query
-    event_time: String, // RFC3339 UTC (message.go:28)
-    position: Long, // LogPos analog = turn_idx
-    txn_id: Long, // XId analog (0 for queries)
-    row_repr: String, // canonical "k=v,..." of Data.Row (null for Update/Query)
-    old_repr: String, // Update only
-    new_repr: String, // Update only
-    mapping_notice: String, // "" when clean (Data/OldData side)
-    new_mapping_notice: String, // Update only — NewData's own per-row notice (row_data.go:15)
-    query: String, // Query only (raw SQL)
-    text: String // byte-identical original turn text (north-rule invariant)
 )

@@ -47,6 +47,23 @@ object Sessionize {
         min(col("ts")).as("started_at"),
         max(col("ts")).as("ended_at"))
 
+  /** Role-transition matrix — the conversation-flow fingerprint (who
+    * speaks after whom, e.g. user→assistant→tool loops) that transcript
+    * analytics and agent-behavior monitoring aggregate first. One `lead`
+    * over the SAME (conv_id, turn_idx) window the pipeline already sorts
+    * by (exchange reuse, like [[sessionize]]), then a partial-aggregated
+    * count over ≤ |roles|² keys — the final shuffle moves a handful of
+    * rows regardless of corpus size. Output: (role, next_role, n).
+    */
+  def roleTransitions(turns: DataFrame): DataFrame = {
+    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    turns.select(col("conv_id"), col("turn_idx"), col("role"))
+      .withColumn("next_role", lead(col("role"), 1).over(w))
+      .filter(col("next_role").isNotNull)
+      .groupBy("role", "next_role")
+      .agg(count(lit(1)).as("n"))
+  }
+
   /** Session bounds via Spark's native `session_window` aggregation — the
     * engine-provided alternative to the window-frame formulation above, and
     * the ONE formulation that also runs under Structured Streaming (see
@@ -66,26 +83,16 @@ object Sessionize {
     * sort aggregate over (conv_id, merged window)); no window frames, no
     * O(partition²) anything.
     */
-  /** Role-transition matrix — the conversation-flow fingerprint (who
-    * speaks after whom, e.g. user→assistant→tool loops) that transcript
-    * analytics and agent-behavior monitoring aggregate first. One `lead`
-    * over the SAME (conv_id, turn_idx) window the pipeline already sorts
-    * by (exchange reuse, like [[sessionize]]), then a partial-aggregated
-    * count over ≤ |roles|² keys — the final shuffle moves a handful of
-    * rows regardless of corpus size. Output: (role, next_role, n).
-    */
-  def roleTransitions(turns: DataFrame): DataFrame = {
-    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    turns.select(col("conv_id"), col("turn_idx"), col("role"))
-      .withColumn("next_role", lead(col("role"), 1).over(w))
-      .filter(col("next_role").isNotNull)
-      .groupBy("role", "next_role")
-      .agg(count(lit(1)).as("n"))
-  }
-
   def sessionWindowBounds(turns: DataFrame, gap: String = "1 hour"): DataFrame =
-    turns
-      .withColumn("event_ts", col("ts").cast("timestamp"))
+    sessionWindows(turns, gap, None)
+
+  /** [[sessionWindowBounds]], with the event time behind `watermark` when
+    * one is given (the streaming form).
+    */
+  private[graft] def sessionWindows(turns: DataFrame, gap: String,
+      watermark: Option[String]): DataFrame = {
+    val timed = turns.withColumn("event_ts", col("ts").cast("timestamp"))
+    watermark.fold(timed)(timed.withWatermark("event_ts", _))
       .groupBy(col("conv_id"), session_window(col("event_ts"), gap).as("sw"))
       .agg(
         min(col("turn_idx")).as("first_turn"),
@@ -94,4 +101,5 @@ object Sessionize {
       .select(col("conv_id"), col("sw.start").as("sess_start"),
         col("sw.end").as("sess_end"), col("first_turn"), col("last_turn"),
         col("n_turns"))
+  }
 }

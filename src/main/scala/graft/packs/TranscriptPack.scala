@@ -23,10 +23,16 @@ object TranscriptPack extends QueryPack {
   /** DuckDB mirror of [[Parse]]'s leading-token field read: the text after
     * the first `marker` up to the next space, TRY_CAST to `to` — null when
     * the marker is absent or the token is not a number (`xid=abc`, `xid=5x`).
+    * The cast only sees an optionally signed digit run, padded by the
+    * whitespace both engines' casts trim: DuckDB's TRY_CAST to an integer
+    * rounds `5.5` and reads `1e3`, where Spark's `try_cast` gives null.
     */
-  private def duckLeadingToken(marker: String, to: String): String =
-    s"""CASE WHEN strpos(text, '$marker') > 0
-           THEN TRY_CAST(split_part(substr(text, strpos(text, '$marker') + ${marker.length}), ' ', 1) AS $to) END"""
+  private def duckLeadingToken(marker: String, to: String): String = {
+    val token = s"split_part(substr(text, strpos(text, '$marker') + ${marker.length}), ' ', 1)"
+    val ws = """[\t\n\v\f\r]*"""
+    s"""CASE WHEN strpos(text, '$marker') > 0 AND regexp_matches($token, '^$ws[+-]?[0-9]+$ws$$')
+           THEN TRY_CAST($token AS $to) END"""
+  }
 
   private val duckParsed = """parsed AS (
     SELECT *,

@@ -156,9 +156,9 @@ object StreamingPipeline {
     }
 
   /** Streaming gap sessionization via the native `session_window`
-    * aggregate — the unbounded-ingest form of
-    * [[graft.operators.Sessionize.sessionWindowBounds]] (same merge
-    * semantics, graded for batch parity by `x3_session_window`). Sessions
+    * aggregate — [[graft.operators.Sessionize.sessionWindowBounds]]'s own
+    * aggregation behind a watermark (batch parity graded by
+    * `x3_session_window` vs `x4_session_window_stream`). Sessions
     * merge/extend in the session-window state store as turns arrive; in
     * Append mode a session is emitted exactly once, when the watermark
     * (max event time − `watermark`) passes its END (last ts + gap) — i.e.
@@ -169,17 +169,7 @@ object StreamingPipeline {
     */
   def sessionBoundsStream(turns: DataFrame, gap: String = "1 hour",
       watermark: String = "10 minutes"): DataFrame =
-    turns
-      .withColumn("event_ts", col("ts").cast("timestamp"))
-      .withWatermark("event_ts", watermark)
-      .groupBy(col("conv_id"), session_window(col("event_ts"), gap).as("sw"))
-      .agg(
-        min(col("turn_idx")).as("first_turn"),
-        max(col("turn_idx")).as("last_turn"),
-        count(lit(1)).as("n_turns"))
-      .select(col("conv_id"), col("sw.start").as("sess_start"),
-        col("sw.end").as("sess_end"), col("first_turn"), col("last_turn"),
-        col("n_turns"))
+    graft.operators.Sessionize.sessionWindows(turns, gap, Some(watermark))
 
   /** Watermarked per-sink windowed counts — the streaming aggregate stage. */
   def windowedSinkCounts(routedStream: DataFrame, window_ : String = "5 minutes",

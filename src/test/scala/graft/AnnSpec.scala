@@ -152,7 +152,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("trained IVF balances inverted lists vs the r01 first-K placeholder") {
-    val assigned = Similarity.ivfAssign(emb, nCentroids = 8)
+    val assigned = Similarity.assignCentroids(emb, Similarity.trainCentroids(emb, k = 8))
       .groupBy("cent_id").agg(count(lit(1)).as("n"))
       .collect().map(_.getAs[Long]("n"))
     assert(assigned.length == 8, "no cluster may be empty")
@@ -163,21 +163,24 @@ class AnnSpec extends SparkSpec {
       s"inverted lists skewed: ${assigned.toList}")
   }
 
-  test("assignCentroids agrees with a window-based argmax (tie rule: lowest cent_id)") {
+  test("assignCentroids and probeCentroids ≡ a window top-nProbe (tie rule: lowest cent_id)") {
     val cents = Similarity.trainCentroids(emb, k = 8)
-    val fold = Similarity.assignCentroids(emb, cents)
-      .select("vec_id", "cent_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(col("cscore").desc, col("cent_id").asc)
-    val windowed = emb
+    val ranked = emb
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("emb"))
       .join(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
         Similarity.cosine(col("emb"), col("cent_emb")).as("cscore"))
-      .withColumn("crank", row_number().over(w)).filter(col("crank") === 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fold == windowed)
+      .withColumn("crank", row_number().over(w))
+    def probes(df: DataFrame): Set[(Long, Long)] =
+      df.select("vec_id", "cent_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val n = emb.count()
+    for ((nProbe, got) <- Seq(1 -> Similarity.assignCentroids(emb, cents),
+        4 -> Similarity.probeCentroids(emb, cents, 4))) {
+      assert(probes(got) == probes(ranked.filter(col("crank") <= nProbe)), s"nProbe=$nProbe")
+      assert(got.count() == nProbe * n, s"nProbe=$nProbe")
+    }
   }
 
   test("IVF recall@5 vs brute force is usable (nProbe=4 of 16)") {

@@ -98,6 +98,13 @@ class ParseSpec extends SparkSpec {
     assert(field("EVENT commit xid=42", "xid").contains(42L))
     assert(field("EVENT commit xid=5 extra", "xid").contains(5L))
     assert(field("EVENT commit xid=abc", "xid").isEmpty)
+    // a sign and leading zeros read; a decimal or exponent form is null
+    // (the DuckDB oracle's TRY_CAST alone would round or expand those)
+    assert(field("EVENT commit xid=+7", "xid").contains(7L))
+    assert(field("EVENT commit xid=007", "xid").contains(7L))
+    assert(field("EVENT commit xid=7\t", "xid").contains(7L))
+    for (x <- Seq("5.5", "5.0", "1e3", "5."))
+      assert(field(s"EVENT commit xid=$x", "xid").isEmpty, x)
     assert(field("EVENT commit", "xid").isEmpty)
     assert(field("EVENT insert rows=x vals=[1|a]", "rows_declared").isEmpty)
     assert(field("EVENT insert rows=1 vals=[1|a]", "rows_declared").contains(1))

@@ -129,6 +129,17 @@ class PlanSpec extends SparkSpec {
       s"corpus-side shuffle in IVF assignment:\n$exec")
   }
 
+  test("ivfTopK ranks in one window: centroid probing is row-local") {
+    import org.apache.spark.sql.functions._
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val emb = s.range(200).select(col("id").as("vec_id"),
+      array((1 to 8).map(i => sin(col("id") * i).cast("float")): _*).as("embedding"))
+    val exec = graft.ann.Similarity.ivfTopK(emb, 0L until 8L, 5).queryExecution.executedPlan
+    val windows = exec.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    assert(windows.size == 1, s"expected one WindowExec (the top-k rank):\n$exec")
+  }
+
   /** Executed plan of the first Spark query that `run` starts, captured
     * when it finishes (listener events arrive asynchronously; only queries
     * created after `since` count); null if none finished within 60 s.
