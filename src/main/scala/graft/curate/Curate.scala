@@ -27,48 +27,49 @@ object Curate {
   def bucket(key: Column, salt: String, mod: Int): Column =
     pmod(Dedup.h32(concat(key.cast("string"), lit(salt))), lit(mod.toLong))
 
-  /** Deterministic train/val/test assignment by hashed doc_id — the
+  /** `key` looked up in `m`, else `default`: one CASE chain over the map's
+    * entries.
+    */
+  private def caseOf(key: Column, m: Map[String, Int], default: Int): Column =
+    m.foldLeft(lit(default)) { case (acc, (k, v)) => when(key === k, v).otherwise(acc) }
+
+  /** Deterministic 90/5/5 train/val/test assignment by hashed doc_id — the
     * reproducible split every training pipeline needs. Row-local (no
     * shuffle, no RNG): at 100 TB this is a free column on the scan, and
     * re-running on any cluster size yields byte-identical membership.
     * Output: (doc_id, bucket, split).
     */
-  def split(docs: DataFrame, salt: String = "graft-split",
-      trainPct: Int = 90, valPct: Int = 5): DataFrame = {
-    val b = bucket(col("doc_id"), salt, 100)
+  def split(docs: DataFrame): DataFrame = {
+    val b = bucket(col("doc_id"), "graft-split", 100)
     docs.select(
       col("doc_id"), b.as("bucket"),
-      when(b < trainPct, "train")
-        .when(b < trainPct + valPct, "val")
-        .otherwise("test").as("split"))
+      when(b < 90, "train").when(b < 95, "val").otherwise("test").as("split"))
   }
 
   /** Per-language sampling rates (percent kept) for the stratified
     * sample — the up/down-weighting step of corpus mixing. Unlisted
-    * languages fall back to `defaultPct`.
+    * languages keep 10%.
     */
-  val defaultRates: Map[String, Int] =
+  val sampleRates: Map[String, Int] =
     Map("en" -> 60, "de" -> 40, "fr" -> 40, "es" -> 20)
 
   /** Deterministic stratified sample: keep a doc iff its salted hash
-    * bucket falls under its language's rate. Row-local filter — pushes
-    * to the scan, prunes to three columns, never shuffles; exact expected
-    * proportions are a property of the hash, not of a seed.
+    * bucket falls under its language's rate ([[sampleRates]]). Row-local
+    * filter — pushes to the scan, prunes to three columns, never shuffles;
+    * exact expected proportions are a property of the hash, not of a seed.
     * Output: kept (doc_id, lang, bucket) rows.
     */
-  def sampleStratified(docs: DataFrame,
-      rates: Map[String, Int] = defaultRates, defaultPct: Int = 10,
-      salt: String = "graft-sample"): DataFrame = {
-    val rate = rates.foldLeft(lit(defaultPct)) { case (acc, (lang, pct)) =>
-      when(col("lang") === lang, pct).otherwise(acc)
-    }
-    val b = bucket(col("doc_id"), salt, 100)
+  def sampleStratified(docs: DataFrame): DataFrame = {
+    val b = bucket(col("doc_id"), "graft-sample", 100)
     docs.select(col("doc_id"), col("lang"), b.as("bucket"))
-      .filter(col("bucket") < rate)
+      .filter(col("bucket") < caseOf(col("lang"), sampleRates, 10))
   }
 
+  /** Tokens per training shard for [[packShards]]. */
+  private val ShardBudget = 512L
+
   /** Token-budget shard packing: contiguous-fill documents (ordered by
-    * doc_id) into shards of ~`budget` tokens WITHIN each source — the
+    * doc_id) into shards of ~512 tokens WITHIN each source — the
     * "write training shards of N tokens" step. shard_idx = exclusive
     * running token count / budget, so a shard can overflow by at most one
     * document (the standard streaming-pack approximation; exact bin
@@ -85,12 +86,12 @@ object Curate {
     * count job at call time) — the price of a self-defending default.
     * Output: (doc_id, source, n_tokens, shard_idx).
     */
-  def packShards(docs: DataFrame, budget: Long = 512,
+  def packShards(docs: DataFrame,
       hotSourceThreshold: Long = HotSourceThreshold): DataFrame = {
     val maxRows = docs.groupBy("source").count()
-      .agg(coalesce(max("count"), lit(0L))).head.getLong(0)
-    if (maxRows > hotSourceThreshold) packShardsSalted(docs, budget)
-    else packShardsPlain(docs, budget)
+      .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
+    if (maxRows > hotSourceThreshold) packShardsSalted(docs)
+    else packShardsPlain(docs)
   }
 
   /** Rows per source above which [[packShards]] block-salts: sized so the
@@ -99,12 +100,12 @@ object Curate {
     */
   val HotSourceThreshold: Long = 4L * 1000 * 1000
 
-  private def packShardsPlain(docs: DataFrame, budget: Long): DataFrame = {
+  private def packShardsPlain(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("source").orderBy("doc_id")
     docs.select(col("doc_id"), col("source"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("shard_idx",
-        floor((sum(col("n_tokens")).over(w) - col("n_tokens")) / budget))
+        floor((sum(col("n_tokens")).over(w) - col("n_tokens")) / ShardBudget))
   }
 
   /** [[packShards]] with the hot-source guard applied: a giant source's
@@ -117,8 +118,7 @@ object Curate {
     * [[graft.operators.TxnStamp.stampSalted]] backfill shape. Output is
     * byte-identical to [[packShards]] (spec-asserted).
     */
-  def packShardsSalted(docs: DataFrame, budget: Long = 512,
-      blockSize: Long = 65536): DataFrame = {
+  def packShardsSalted(docs: DataFrame, blockSize: Long = 65536): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("block", floor(col("doc_id") / blockSize))
@@ -132,12 +132,13 @@ object Curate {
       .select(col("source"), col("block"), col("offset"))
     local.join(offsets, Seq("source", "block"))
       .withColumn("shard_idx",
-        floor((col("offset") + col("cum_local") - col("n_tokens")) / budget))
+        floor((col("offset") + col("cum_local") - col("n_tokens")) / ShardBudget))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("shard_idx"))
   }
 
   /** Deterministic weighted corpus mixing: an interleave key that orders
-    * documents so sources appear in proportion to `weights` — the mixture
+    * documents so sources appear in proportion to `weights` (an unlisted
+    * source weighs 1) — the mixture
     * step of corpus assembly (e.g. 3× source A to 1× source B), with no
     * RNG. Each doc gets a deterministic per-source rank (by salted hash,
     * so the order inside a source is an unbiased shuffle) and
@@ -150,16 +151,12 @@ object Curate {
     * orderBy when writing the mixed corpus).
     * Output: (doc_id, source, rank, mix_key).
     */
-  def mix(docs: DataFrame, weights: Map[String, Int] = Map(),
-      defaultWeight: Int = 1, salt: String = "graft-mix"): DataFrame = {
+  def mix(docs: DataFrame, weights: Map[String, Int] = Map()): DataFrame = {
     val w = Window.partitionBy("source").orderBy("h", "doc_id")
-    val weight = weights.foldLeft(lit(defaultWeight)) { case (acc, (src, wt)) =>
-      when(col("source") === src, wt).otherwise(acc)
-    }
     docs.select(col("doc_id"), col("source"),
-        bucket(col("doc_id"), salt, 1 << 30).as("h"))
+        bucket(col("doc_id"), "graft-mix", 1 << 30).as("h"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("wt", weight.cast("long"))
+      .withColumn("wt", caseOf(col("source"), weights, 1).cast("long"))
       // `div` = integral divide: exact at any rank (a double `/` + floor
       // silently loses exactness past 2^53 — real at trillion-doc scale)
       .select(col("doc_id"), col("source"), col("rank"),
@@ -170,47 +167,57 @@ object Curate {
     * In production this is the published eval set; the sandbox corpus has
     * none, so membership is derived portably from the same hash family.
     */
-  def isBenchmark(salt: String = "graft-bench"): Column =
-    bucket(col("doc_id"), salt, 20) === 0
+  def isBenchmark(): Column =
+    bucket(col("doc_id"), "graft-bench", 20) === 0
+
+  /** (doc_id, is_bench, shs): the shared shingled view both
+    * decontamination paths read. Split out so a caller composing SEVERAL
+    * passes over it (e.g. the graded bloom-vs-exact comparison) can
+    * materialize it once instead of re-shingling the corpus per pass.
+    */
+  def shingled(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), isBenchmark().as("is_bench"),
+      Dedup.shingles(col("text")).as("shs"))
+
+  /** The benchmark side of `shingled` as a DISTINCT shingle SET: one row
+    * per shingle, so a join against it multiplies nothing.
+    */
+  private def benchShingles(shingled: DataFrame): DataFrame =
+    shingled.filter(col("is_bench")).select(explode(col("shs")).as("sh")).distinct()
+
+  /** The corpus side of `shingled` exploded to (doc_id, n_shingles, sh),
+    * cut by `probe` to the shingles it finds in the benchmark set, and
+    * counted per doc. Per-doc shingles are already distinct, so the agg is
+    * a plain count (no count-distinct Expand).
+    * Output: (doc_id, n_shingles, n_hits) for docs with ≥ 1 hit.
+    */
+  private def hits(shingled: DataFrame)(probe: DataFrame => DataFrame): DataFrame =
+    probe(shingled.filter(!col("is_bench"))
+      .select(col("doc_id"), size(col("shs")).cast("long").as("n_shingles"),
+        explode(col("shs")).as("sh")))
+      .groupBy("doc_id")
+      .agg(min(col("n_shingles")).as("n_shingles"),
+        count(lit(1)).as("n_hits"))
 
   /** Benchmark decontamination: flag corpus documents sharing any token
     * 3-gram shingle with the benchmark set — the n-gram-overlap
     * contamination check run before training on any crawl.
     *
     * Scale shape: the benchmark side (eval suites; thousands of docs, not
-    * billions) reduces to a DISTINCT shingle SET — one row per shingle, so
-    * the join multiplies nothing — and BROADCASTS into the corpus-side
-    * explode; the corpus is never shuffled and never self-joined. Per-doc
-    * shingles are already distinct, so the agg is a plain count (no
-    * count-distinct Expand). At 100 TB the broadcast set becomes a bloom
-    * filter with identical query shape. Carrying n_shingles makes the
-    * contamination RATIO derivable downstream.
+    * billions) reduces to a DISTINCT shingle SET ([[benchShingles]]) and
+    * BROADCASTS into the corpus-side explode ([[hits]]); the corpus is
+    * never shuffled and never self-joined. At 100 TB the broadcast set
+    * becomes a bloom filter with identical query shape
+    * ([[decontaminateBloom]]). Carrying n_shingles makes the contamination
+    * RATIO derivable downstream.
     * Output: contaminated (doc_id, n_shingles, n_hits).
     */
-  /** (doc_id, is_bench, shs): the shared shingled view both
-    * decontamination paths read. Split out so a caller composing SEVERAL
-    * passes over it (e.g. the graded bloom-vs-exact comparison) can
-    * materialize it once instead of re-shingling the corpus per pass.
-    */
-  def shingled(docs: DataFrame, salt: String = "graft-bench"): DataFrame =
-    docs.select(col("doc_id"), isBenchmark(salt).as("is_bench"),
-      Dedup.shingles(col("text")).as("shs"))
-
-  def decontaminate(docs: DataFrame, salt: String = "graft-bench"): DataFrame =
-    decontaminateShingled(shingled(docs, salt))
+  def decontaminate(docs: DataFrame): DataFrame =
+    decontaminateShingled(shingled(docs))
 
   /** [[decontaminate]] over a pre-shingled frame. */
-  def decontaminateShingled(shingled: DataFrame): DataFrame = {
-    val benchSh = shingled.filter(col("is_bench"))
-      .select(explode(col("shs")).as("sh")).distinct()
-    shingled.filter(!col("is_bench"))
-      .select(col("doc_id"), size(col("shs")).cast("long").as("n_shingles"),
-        explode(col("shs")).as("sh"))
-      .join(broadcast(benchSh), "sh")
-      .groupBy("doc_id")
-      .agg(min(col("n_shingles")).as("n_shingles"),
-        count(lit(1)).as("n_hits"))
-  }
+  def decontaminateShingled(shingled: DataFrame): DataFrame =
+    hits(shingled)(_.join(broadcast(benchShingles(shingled)), "sh"))
 
   /** The documented 100 TB swap for [[decontaminate]] (graded, per the
     * capped/uncapped precedent of grading both sides of a scale knob): the
@@ -232,8 +239,8 @@ object Curate {
     * (`cur_decontaminate_bloom` grades both properties; measured FP rate
     * recorded in BASELINE.md).
     */
-  def decontaminateBloom(docs: DataFrame, salt: String = "graft-bench"): DataFrame =
-    decontaminateBloomShingled(shingled(docs, salt))
+  def decontaminateBloom(docs: DataFrame): DataFrame =
+    decontaminateBloomShingled(shingled(docs))
 
   /** The bloom filter's sizing: expected benchmark shingles and false
     * positive rate.
@@ -247,31 +254,27 @@ object Curate {
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(BloomItems, BloomFpp)
-    val bloomBytes = shingled.filter(col("is_bench"))
-      .select(explode(col("shs")).as("sh")).distinct()
+    val bloomBytes = benchShingles(shingled)
       .agg(column(new BloomFilterAggregate(expression(xxhash64(col("sh"))),
         expression(lit(BloomItems)), expression(lit(numBits)))
         .toAggregateExpression()).as("bf"))
-      .head.getAs[Array[Byte]](0)
+      .head().getAs[Array[Byte]](0)
     require(bloomBytes != null, "benchmark set is empty — nothing to build a bloom from")
-    shingled.filter(!col("is_bench"))
-      .select(col("doc_id"), size(col("shs")).cast("long").as("n_shingles"),
-        explode(col("shs")).as("sh"))
-      .filter(column(BloomFilterMightContain(expression(lit(bloomBytes)),
-        expression(xxhash64(col("sh"))))))
-      .groupBy("doc_id")
-      .agg(min(col("n_shingles")).as("n_shingles"),
-        count(lit(1)).as("n_hits"))
+    hits(shingled)(_.filter(column(BloomFilterMightContain(expression(lit(bloomBytes)),
+      expression(xxhash64(col("sh")))))))
   }
 
+  /** Tokens per chunk for [[chunk]]. */
+  private val ChunkTokens = 64
+
   /** Context-length chunking: split each document into consecutive
-    * `maxTokens`-token chunks — the step that fits documents to a model's
+    * 64-token chunks — the step that fits documents to a model's
     * context window before packing. Row-local (sequence + explode inside
     * the scan, zero shuffle); chunk boundaries are token-index ranges so
     * the operation is reversible and deterministic.
     * Output: (doc_id, chunk_idx, n_chunk_tokens, chunk_text).
     */
-  def chunk(docs: DataFrame, maxTokens: Int = 64): DataFrame = {
+  def chunk(docs: DataFrame): DataFrame = {
     val toks = TextAnalysis.tokens(col("text"))
     docs.select(col("doc_id"), toks.as("toks"))
       // degenerate guard (ADVICE r04): size() is -1 for a null token array
@@ -283,13 +286,13 @@ object Curate {
       .filter(size(col("toks")) >= 1)
       .select(col("doc_id"),
         explode(sequence(lit(0),
-          ((size(col("toks")) - 1) / maxTokens).cast("int"))).as("chunk_idx"),
+          ((size(col("toks")) - 1) / ChunkTokens).cast("int"))).as("chunk_idx"),
         col("toks"))
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-        least(size(col("toks")) - col("chunk_idx") * maxTokens,
-          lit(maxTokens)).cast("long").as("n_chunk_tokens"),
+        least(size(col("toks")) - col("chunk_idx") * ChunkTokens,
+          lit(ChunkTokens)).cast("long").as("n_chunk_tokens"),
         array_join(slice(col("toks"),
-          (col("chunk_idx") * maxTokens + 1).cast("int"), lit(maxTokens)), " ")
+          (col("chunk_idx") * ChunkTokens + 1).cast("int"), lit(ChunkTokens)), " ")
           .as("chunk_text"))
   }
 
@@ -318,7 +321,7 @@ object Curate {
     * own flag so downstream can audit WHY a document was dropped, not
     * just that it was:
     *
-    *  - `ok_len`: token count within [`minTokens`, `maxTokens`]
+    *  - `ok_len`: token count within [5, 5000]
     *  - `ok_word_len`: mean token length in [2, 12], tested as
     *    `sum_len ∈ [2·n, 12·n]` (sum of token lengths = length of the
     *    whitespace-collapsed text minus the n−1 separators — a codegen'd
@@ -335,24 +338,22 @@ object Curate {
     * Retention calibration: on THIS synthetic corpus (near-random token
     * streams) the stopword rule dominates and keeps only a few percent —
     * expected, since the rule exists precisely to reject non-natural
-    * language; on a real crawl the pass rate is far higher. Every
-    * threshold is a parameter, and each rule's flag is graded separately
-    * (`cur_quality_gate`), so re-tuning changes no query shape.
+    * language; on a real crawl the pass rate is far higher. Each rule's
+    * flag is graded separately (`cur_quality_gate`), so re-tuning a
+    * threshold changes no query shape.
     * Output: (doc_id, n_tokens, ok_len, ok_word_len, ok_stop, ok_punct,
     * ok_distinct, keep).
     */
-  def qualityGate(docs: DataFrame, minTokens: Int = 5,
-      maxTokens: Int = 5000): DataFrame = {
+  def qualityGate(docs: DataFrame): DataFrame = {
     val toks = TextAnalysis.tokens(col("text"))
     val nTokens = size(toks)
     val sumLen =
       length(regexp_replace(trim(col("text")), "\\s+", " ")) - (nTokens - 1)
-    val nStop = size(filter(toks,
-      t => t.isin(TextAnalysis.stopwords("en"): _*)))
-    val nPunct = length(regexp_replace(col("text"), "[^.,;:!?]", ""))
+    val nStop = TextAnalysis.stopCount(toks, "en")
+    val nPunct = TextAnalysis.punctCount(col("text"))
     val nChars = length(col("text"))
     val nDistinct = size(array_distinct(toks))
-    val okLen = nTokens >= minTokens && nTokens <= maxTokens
+    val okLen = nTokens >= 5 && nTokens <= 5000
     val okWordLen = sumLen >= nTokens * 2 && sumLen <= nTokens * 12
     val okStop = nStop >= 2
     val okPunct = nPunct * 10 <= nChars
@@ -412,7 +413,7 @@ object Curate {
     * mergeable partial agg — exact `percentile` holds every value per
     * group in memory, which a 100 TB group cannot) with its rank-error
     * guarantee MEASURED: for each (lang, quartile) the approx value's
-    * actual rank must land within q·n ± (n/accuracy + 1).
+    * actual rank must land within q·n ± (n/100 + 1) at accuracy 100.
     *
     * The approx values themselves are sketch-implementation-specific, so
     * the portable graded truth is (a) the exact quartiles, hash-matched,
@@ -420,7 +421,8 @@ object Curate {
     * `cur_decontaminate_bloom`.
     * Output: (lang, q, n_docs, exact_val, rank_ok).
     */
-  def lengthQuantilesApprox(docs: DataFrame, accuracy: Int = 100): DataFrame = {
+  def lengthQuantilesApprox(docs: DataFrame): DataFrame = {
+    val accuracy = 100
     val qs = Seq(0.25, 0.5, 0.75)
     val qArr = array(qs.map(lit): _*)
     def unpack(df: DataFrame, arrCol: String, valName: String): DataFrame =

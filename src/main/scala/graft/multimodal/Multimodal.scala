@@ -7,23 +7,18 @@ import org.apache.spark.sql.functions._
   * with typed metadata, plus decode / feature-extract / resize /
   * frame-sample operators.
   *
-  * The Spark-side plumbing is real and tested — schema, partitioning,
-  * batched per-partition processing (the Scala analog of `mapInPandas`:
-  * mapPartitions over fixed-size batches so a vectorized decoder gets
-  * amortized calls), deterministic output schema. The IMAGE path runs a
-  * real codec: [[withPngPayload]] encodes deterministic grayscale PNGs and
-  * [[decodeImageFeatures]] decodes them with the JDK's `javax.imageio`
-  * (graded end-to-end by `mm_decode_real`). The AUDIO path too:
-  * [[withWavPayload]] encodes deterministic 16-bit PCM into RIFF/WAVE and
-  * [[decodeAudioFeatures]] decodes it with the JDK's
-  * `javax.sound.sampled` (graded by `mm_audio_real`). Only the VIDEO
-  * codec remains a STUB (`decodeBytes` — no video library ships in this
-  * container or the JDK); swapping in a real one changes that ONE
-  * function, every schema/batch/partition decision stays.
+  * Every operator is a typed row-local `map`, `filter` or `flatMap` over
+  * [[Media]] rows: partition-local, no shuffle, a deterministic output
+  * schema. The IMAGE path runs a real codec: [[withPngPayload]] encodes
+  * deterministic grayscale PNGs and [[decodeImageFeatures]] decodes them
+  * with the JDK's `javax.imageio` (graded end-to-end by `mm_decode_real`).
+  * The AUDIO path too: [[withWavPayload]] encodes deterministic 16-bit PCM
+  * into RIFF/WAVE and [[decodeAudioFeatures]] decodes it with the JDK's
+  * `javax.sound.sampled` (graded by `mm_audio_real`). Only the VIDEO codec
+  * remains a STUB (`decodeBytes` — no video library ships with the JDK);
+  * swapping in a real one changes that ONE function.
   */
 object Multimodal {
-
-  val BatchSize = 64 // decoder batch shape (mapInPandas batch analog)
 
   case class Media(media_id: Long, kind: String, payload: Array[Byte],
       width: Int, height: Int, sample_rate: Int, n_frames: Int)
@@ -59,6 +54,16 @@ object Multimodal {
   private def decodeBytes(payload: Array[Byte]): Array[Int] =
     payload.map(b => b & 0xff)
 
+  /** Mean and 4-bin histogram (bins of 64) of 8-bit samples — the feature
+    * pair both [[extractFeatures]] and [[decodeImageFeatures]] report.
+    */
+  private def meanHist(samples: Array[Int]): (Double, Array[Int]) = {
+    val hist = new Array[Int](4)
+    samples.foreach(s => hist(s / 64) += 1)
+    val n = samples.length
+    (if (n == 0) 0.0 else samples.map(_.toLong).sum.toDouble / n, hist)
+  }
+
   /** Deterministic generative pixel — the fixture contract shared with the
     * DuckDB oracle. The oracle cannot decode PNG, so it recomputes expected
     * features from THIS formula; the Spark side goes formula → PNG encode →
@@ -69,36 +74,28 @@ object Multimodal {
   def pixelAt(id: Long, x: Int, y: Int): Int =
     ((id * 31 + x * 7 + y * 13) % 256).toInt
 
-  /** Replace image payloads with real PNG bytes (grayscale, pixel(x,y) =
-    * [[pixelAt]]). Batched like the decode side: one encoder loop per
-    * `BatchSize` payloads, partition-local, no shuffle.
+  /** `media` with the payload of every `kind` row replaced by `encode(m)`;
+    * rows of other kinds pass through unchanged. Row-local, no shuffle.
     */
-  def withPngPayload(media: Dataset[Media]): Dataset[Media] = {
+  private def withPayload(media: Dataset[Media], kind: String)(
+      encode: Media => Array[Byte]): Dataset[Media] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { m =>
-          if (m.kind != "image") m
-          else {
-            val img = new java.awt.image.BufferedImage(
-              m.width, m.height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val raster = img.getRaster
-            var y = 0
-            while (y < m.height) {
-              var x = 0
-              while (x < m.width) {
-                raster.setSample(x, y, 0, pixelAt(m.media_id, x, y)); x += 1
-              }
-              y += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            m.copy(payload = bos.toByteArray)
-          }
-        }
-      }
-    }
+    media.map(m => if (m.kind == kind) m.copy(payload = encode(m)) else m)
   }
+
+  /** Replace image payloads with real PNG bytes (grayscale, pixel(x,y) =
+    * [[pixelAt]]).
+    */
+  def withPngPayload(media: Dataset[Media]): Dataset[Media] =
+    withPayload(media, "image") { m =>
+      val img = new java.awt.image.BufferedImage(
+        m.width, m.height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      img.getRaster.setSamples(0, 0, m.width, m.height, 0,
+        Array.tabulate(m.width * m.height)(i => pixelAt(m.media_id, i % m.width, i / m.width)))
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
 
   /** Deterministic generative 16-bit PCM sample — the audio fixture
     * contract shared with the DuckDB oracle (the audio analog of
@@ -113,37 +110,28 @@ object Multimodal {
   /** Replace audio payloads with REAL RIFF/WAVE bytes (16-bit little-endian
     * mono PCM, sample i = [[sampleAt]], n = n_frames × 160), encoded with
     * the JDK's `javax.sound.sampled` — the audio analog of
-    * [[withPngPayload]]. Batched, partition-local, no shuffle.
+    * [[withPngPayload]].
     */
-  def withWavPayload(media: Dataset[Media]): Dataset[Media] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { m =>
-          if (m.kind != "audio") m
-          else {
-            val n = math.max(1, m.n_frames) * AudioFrameSamples
-            val pcm = new Array[Byte](n * 2)
-            var i = 0
-            while (i < n) {
-              val s = sampleAt(m.media_id, i)
-              pcm(2 * i) = (s & 0xff).toByte
-              pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-              i += 1
-            }
-            val fmt = new javax.sound.sampled.AudioFormat(
-              m.sample_rate.toFloat, 16, 1, true, false)
-            val ais = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.sound.sampled.AudioSystem.write(ais,
-              javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-            m.copy(payload = bos.toByteArray)
-          }
-        }
+  def withWavPayload(media: Dataset[Media]): Dataset[Media] =
+    withPayload(media, "audio") { m =>
+      val n = math.max(1, m.n_frames) * AudioFrameSamples
+      val pcm = new Array[Byte](n * 2)
+      var i = 0
+      while (i < n) {
+        val s = sampleAt(m.media_id, i)
+        pcm(2 * i) = (s & 0xff).toByte
+        pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
+        i += 1
       }
+      val fmt = new javax.sound.sampled.AudioFormat(
+        m.sample_rate.toFloat, 16, 1, true, false)
+      val ais = new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(ais,
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      bos.toByteArray
     }
-  }
 
   case class AudioFeatures(media_id: Long, n_samples: Int, sum_s: Long,
       min_s: Int, max_s: Int, s0: Int, s_last: Int, n_zero_cross: Int)
@@ -157,32 +145,28 @@ object Multimodal {
     */
   def decodeAudioFeatures(media: Dataset[Media]): Dataset[AudioFeatures] = {
     import media.sparkSession.implicits._
-    media.filter(_.kind == "audio").mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { m =>
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(m.payload))
-          val fmt = ais.getFormat
-          require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
-            !fmt.isBigEndian, s"unexpected decoded format: $fmt")
-          val bytes = ais.readAllBytes()
-          val n = bytes.length / 2
-          var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-          var zc = 0; var prev = 0; var s0 = 0; var last = 0
-          var i = 0
-          while (i < n) {
-            val s = (((bytes(2 * i + 1) & 0xff) << 8) |
-              (bytes(2 * i) & 0xff)).toShort.toInt
-            if (i == 0) s0 = s
-            last = s
-            sum += s; if (s < mn) mn = s; if (s > mx) mx = s
-            if (i > 0 && s * prev < 0) zc += 1 // |s| ≤ 2^15 so the product fits an Int
-            prev = s
-            i += 1
-          }
-          AudioFeatures(m.media_id, n, sum, mn, mx, s0, last, zc)
-        }
+    media.filter(_.kind == "audio").map { m =>
+      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(m.payload))
+      val fmt = ais.getFormat
+      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
+        !fmt.isBigEndian, s"unexpected decoded format: $fmt")
+      val bytes = ais.readAllBytes()
+      val n = bytes.length / 2
+      var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+      var zc = 0; var prev = 0; var s0 = 0; var last = 0
+      var i = 0
+      while (i < n) {
+        val s = (((bytes(2 * i + 1) & 0xff) << 8) |
+          (bytes(2 * i) & 0xff)).toShort.toInt
+        if (i == 0) s0 = s
+        last = s
+        sum += s; if (s < mn) mn = s; if (s > mx) mx = s
+        if (i > 0 && s * prev < 0) zc += 1 // |s| ≤ 2^15 so the product fits an Int
+        prev = s
+        i += 1
       }
+      AudioFeatures(m.media_id, n, sum, mn, mx, s0, last, zc)
     }
   }
 
@@ -197,48 +181,26 @@ object Multimodal {
     */
   def decodeImageFeatures(media: Dataset[Media]): Dataset[ImageFeatures] = {
     import media.sparkSession.implicits._
-    media.filter(_.kind == "image").mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { m =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-          val w = img.getWidth; val h = img.getHeight
-          val raster = img.getRaster
-          val hist = new Array[Int](4)
-          var sum = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = raster.getSample(x, y, 0)
-              sum += p; hist(p / 64) += 1; x += 1
-            }
-            y += 1
-          }
-          ImageFeatures(m.media_id, w, h, w * h, sum.toDouble / (w * h),
-            hist(0), hist(1), hist(2), hist(3),
-            raster.getSample(0, 0, 0), raster.getSample(w - 1, h - 1, 0))
-        }
-      }
+    media.filter(_.kind == "image").map { m =>
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
+      val (w, h) = (img.getWidth, img.getHeight)
+      val px = img.getRaster.getSamples(0, 0, w, h, 0, new Array[Int](w * h))
+      val (mean, hist) = meanHist(px)
+      ImageFeatures(m.media_id, w, h, w * h, mean,
+        hist(0), hist(1), hist(2), hist(3), px(0), px(w * h - 1))
     }
   }
 
-  /** Batched decode + feature extraction. Partition-local, batch-shaped:
-    * `grouped(BatchSize)` hands the (stub) decoder BatchSize payloads at a
-    * time, exactly how a vectorized decoder wants its input.
+  /** Decode + feature extraction through the stub decoder: byte count,
+    * mean byte and 4-bin histogram of every payload.
     */
   def extractFeatures(media: Dataset[Media]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { m =>
-          val samples = decodeBytes(m.payload)
-          val n = samples.length
-          val mean = if (n == 0) 0.0 else samples.map(_.toLong).sum.toDouble / n
-          val hist = new Array[Int](4)
-          samples.foreach(s => hist(s / 64) += 1)
-          MediaFeatures(m.media_id, m.kind, n, mean, hist(0), hist(1), hist(2), hist(3))
-        }
-      }
+    media.map { m =>
+      val samples = decodeBytes(m.payload)
+      val (mean, hist) = meanHist(samples)
+      MediaFeatures(m.media_id, m.kind, samples.length, mean,
+        hist(0), hist(1), hist(2), hist(3))
     }
   }
 
@@ -270,39 +232,28 @@ object Multimodal {
     }
   }
 
-  /** Fixed-point per-dimension embedding checksums — the ORACLE-CHECKABLE
-    * form of [[embed]]. Each (media_id, d) row carries
-    * `round(1e6 * Σ_{i ≡ d (mod dim)} samples(i)/255.0)` computed as a
+  /** Embedding width of [[embedFixedPoint]]. */
+  private val EmbedDim = 16
+
+  /** Fixed-point per-dimension embedding checksums from the decoded
+    * samples — bridges multimodal data into the ANN/similarity operators in
+    * an ORACLE-CHECKABLE form. Each (media_id, d) row, d < 16, carries
+    * `round(1e6 * Σ_{i ≡ d (mod 16)} samples(i)/255.0)` computed as a
     * sequential left-fold over ascending i in Double: DuckDB's
     * `list_reduce` folds the identical list in the identical order, so the
     * doubles are bit-identical cross-engine and the rounded fixed-point is
     * exactly comparable (see MultimodalPack.oracleSql).
     */
-  def embedFixedPoint(media: Dataset[Media], dim: Int = 16): DataFrame = {
+  def embedFixedPoint(media: Dataset[Media]): DataFrame = {
     import media.sparkSession.implicits._
     media.flatMap { m =>
       val s = decodeBytes(m.payload)
-      (0 until dim).map { d =>
+      (0 until EmbedDim).map { d =>
         var acc = 0.0
         var i = d
-        while (i < s.length) { acc += s(i) / 255.0; i += dim }
+        while (i < s.length) { acc += s(i) / 255.0; i += EmbedDim }
         (m.media_id, d, math.round(acc * 1e6))
       }
     }.toDF("media_id", "d", "fp")
-  }
-
-  /** Deterministic embedding from decoded samples (bridges multimodal data
-    * into the ANN/similarity operators).
-    */
-  def embed(media: Dataset[Media], dim: Int = 16): DataFrame = {
-    import media.sparkSession.implicits._
-    media.map { m =>
-      val s = decodeBytes(m.payload)
-      val v = Array.tabulate(dim) { d =>
-        if (s.isEmpty) 0f
-        else s.indices.filter(_ % dim == d).map(i => s(i).toFloat / 255f).sum
-      }
-      (m.media_id, v)
-    }.toDF("media_id", "embedding")
   }
 }

@@ -45,12 +45,26 @@ object Parse {
     when(locate(marker, col("text")) > 0,
       substring(col("text"), locate(marker, col("text")) + marker.length, lit(Int.MaxValue)))
 
-  /** The leading space-delimited token after `marker`, TRY-cast to `to`: a
-    * malformed value (`xid=abc`) becomes null instead of failing the whole
-    * query under ANSI casts; trailing fields (`xid=5 extra`) are ignored.
+  /** The integer-token grammar of `xid=`/`rows=`: an optionally signed
+    * digit run, padded only by the ASCII whitespace `\t \n \x0B \f \r`
+    * that both Spark's and DuckDB's integer casts trim. Without it the
+    * engines disagree: Spark's cast also trims other ISO control
+    * characters (`5\x01` reads 5) and DuckDB's rounds `5.5`. The class
+    * is a hex range, not `\v` (every vertical whitespace in Java), and
+    * the anchor is `\z`, not `$` (which Java also matches before a final
+    * line terminator).
     */
-  private def leadingToken(marker: String, to: String): Column =
-    substring_index(tail(marker), " ", 1).try_cast(to)
+  val IntToken = "^[\\x09-\\x0D]*[+-]?[0-9]+[\\x09-\\x0D]*\\z"
+
+  /** The leading space-delimited token after `marker`, TRY-cast to `to`
+    * when it matches [[IntToken]]: a malformed value (`xid=abc`) becomes
+    * null instead of failing the whole query under ANSI casts; trailing
+    * fields (`xid=5 extra`) are ignored.
+    */
+  private def leadingToken(marker: String, to: String): Column = {
+    val token = substring_index(tail(marker), " ", 1)
+    when(token.rlike(IntToken), token.try_cast(to))
+  }
 
   /** The dispatch half of the parse: kind + commit xid — exactly the
     * columns transaction stamping consumes. The pipeline runs the txn-stamp

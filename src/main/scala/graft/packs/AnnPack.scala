@@ -72,7 +72,7 @@ object AnnPack extends QueryPack {
 
   def queries = Map(
     "ann_brute_topk" -> ((s, dir) => Similarity.bruteForceTopK(emb(s, dir), QueryIds, TopK)),
-    "ann_lsh_buckets" -> ((s, dir) => Similarity.lshBuckets(emb(s, dir), 8)),
+    "ann_lsh_buckets" -> ((s, dir) => Similarity.lshBuckets(emb(s, dir))),
     "ann_ivf_topk" -> ((s, dir) => Similarity.ivfTopK(emb(s, dir), QueryIds, TopK)),
     "ann_cosine_neardup" -> ((s, dir) =>
       Similarity.cosineNearDup(emb(s, dir), NearDupThreshold,

@@ -109,7 +109,7 @@ object CuratePack extends QueryPack {
 
     "cur_sample_stratified" -> {
       val b = duckBucket("doc_id", "graft-sample", 100)
-      val rate = Curate.defaultRates.foldLeft("10") { case (acc, (lang, pct)) =>
+      val rate = Curate.sampleRates.foldLeft("10") { case (acc, (lang, pct)) =>
         s"CASE WHEN lang = '$lang' THEN $pct ELSE $acc END"
       }
       s"""SELECT doc_id, lang, $b AS bucket FROM documents

@@ -22,15 +22,13 @@ object TranscriptPack extends QueryPack {
 
   /** DuckDB mirror of [[Parse]]'s leading-token field read: the text after
     * the first `marker` up to the next space, TRY_CAST to `to` — null when
-    * the marker is absent or the token is not a number (`xid=abc`, `xid=5x`).
-    * The cast only sees an optionally signed digit run, padded by the
-    * whitespace both engines' casts trim: DuckDB's TRY_CAST to an integer
-    * rounds `5.5` and reads `1e3`, where Spark's `try_cast` gives null.
+    * the marker is absent or the token does not match [[Parse.IntToken]]
+    * (`xid=abc`, `xid=5x`, `xid=5.5`), the one integer grammar both
+    * engines share.
     */
   private def duckLeadingToken(marker: String, to: String): String = {
     val token = s"split_part(substr(text, strpos(text, '$marker') + ${marker.length}), ' ', 1)"
-    val ws = """[\t\n\v\f\r]*"""
-    s"""CASE WHEN strpos(text, '$marker') > 0 AND regexp_matches($token, '^$ws[+-]?[0-9]+$ws$$')
+    s"""CASE WHEN strpos(text, '$marker') > 0 AND regexp_matches($token, '${Parse.IntToken}')
            THEN TRY_CAST($token AS $to) END"""
   }
 

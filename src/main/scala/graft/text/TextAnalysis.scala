@@ -24,8 +24,13 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans"),
     "es" -> Seq("el", "la", "los", "y", "es", "un", "una", "que"))
 
-  private def stopCount(toks: Column, lang: String): Column =
+  /** Stopword hits of `lang` among `toks`. */
+  private[graft] def stopCount(toks: Column, lang: String): Column =
     size(filter(toks, t => t.isin(stopwords(lang): _*)))
+
+  /** Punctuation characters (`.,;:!?`) in `text`. */
+  private[graft] def punctCount(text: Column): Column =
+    length(regexp_replace(text, "[^.,;:!?]", ""))
 
   /** doc_id, n_tokens, n_distinct, n_chars_m. */
   def tokenStats(docs: DataFrame): DataFrame = {
@@ -48,7 +53,7 @@ object TextAnalysis {
       size(toks).as("n_tokens"),
       stopCount(toks, "en").as("n_stop"),
       size(filter(toks, t => length(t) >= 10)).as("n_long_tokens"),
-      length(regexp_replace(col("text"), "[^.,;:!?]", "")).as("n_punct"),
+      punctCount(col("text")).as("n_punct"),
       length(regexp_replace(col("text"), "[^A-Z]", "")).as("n_upper"))
   }
 
@@ -89,7 +94,8 @@ object TextAnalysis {
     * map-only pass that rewrites text in place).
     * Output: (doc_id, n_emails, n_ipv4, n_phones, clean_text).
     */
-  def piiScrub(docs: DataFrame, textCol: Column = col("text")): DataFrame = {
+  def piiScrub(docs: DataFrame): DataFrame = {
+    val textCol = col("text")
     val clean = regexp_replace(
       regexp_replace(
         regexp_replace(textCol, EmailRe, "<EMAIL>"),

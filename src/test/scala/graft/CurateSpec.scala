@@ -52,7 +52,7 @@ class CurateSpec extends SparkSpec {
   }
 
   test("packShards: shards within a source are contiguous and budget-shaped") {
-    val packed = Curate.packShards(docs, budget = 512).cache()
+    val packed = Curate.packShards(docs).cache()
     // exclusive-prefix rule: first doc of every source lands in shard 0
     val firstShard = packed
       .withColumn("rk", row_number().over(
@@ -72,7 +72,7 @@ class CurateSpec extends SparkSpec {
     // (unpersist first — cache lookup matches the logically-equal fresh
     // frame and its InMemoryRelation prints the plan twice)
     packed.unpersist(blocking = true)
-    val p = plan(Curate.packShards(docs, budget = 512))
+    val p = plan(Curate.packShards(docs))
     assert("Exchange hashpartitioning".r.findAllIn(p).length == 1, p)
     assert(!"Sort \\[[^\\]]*\\], true".r.findAllIn(p).hasNext,
       s"global sort in packing plan:\n$p")
@@ -81,19 +81,19 @@ class CurateSpec extends SparkSpec {
   test("packShardsSalted ≡ packShards (hot-source block split changes nothing)") {
     // blockSize 64 on 500 docs -> ~8 blocks per source: the block-offset
     // join path is genuinely exercised
-    val plain = Curate.packShards(docs, budget = 512)
-    val salted = Curate.packShardsSalted(docs, budget = 512, blockSize = 64)
+    val plain = Curate.packShards(docs)
+    val salted = Curate.packShardsSalted(docs, blockSize = 64)
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
       "salted packing must be byte-identical to the single-window form")
     // scale shape: the per-doc window partitions by (source, block) — the
     // only full-width exchange keys both columns; no global sort
-    val p = plan(Curate.packShardsSalted(docs, budget = 512, blockSize = 64))
+    val p = plan(Curate.packShardsSalted(docs, blockSize = 64))
     assert(p.contains("hashpartitioning(source") && p.contains("block"),
       s"expected (source, block) exchange:\n$p")
     assert(!"Sort \\[[^\\]]*\\], true".r.findAllIn(p).hasNext, p)
     // the default-on guard: a threshold below the fixture's source sizes
     // flips the plain entry point onto the salted path, output-identical
-    val auto = Curate.packShards(docs, budget = 512, hotSourceThreshold = 10)
+    val auto = Curate.packShards(docs, hotSourceThreshold = 10)
     assert(auto.exceptAll(plain).isEmpty && plain.exceptAll(auto).isEmpty,
       "auto-salted packShards must match the plain output")
     assert(plan(auto).contains("block"),
@@ -136,7 +136,7 @@ class CurateSpec extends SparkSpec {
   }
 
   test("chunk: reassembles to the original token stream; zero-shuffle plan") {
-    val c = Curate.chunk(docs, maxTokens = 64)
+    val c = Curate.chunk(docs)
     assert(!plan(c).contains("Exchange"), "chunking must be row-local")
     // concatenating chunks in chunk_idx order restores the tokenized doc
     val reassembled = c.orderBy("doc_id", "chunk_idx")
@@ -147,7 +147,7 @@ class CurateSpec extends SparkSpec {
     val diff = reassembled.join(original, "doc_id")
       .filter(col("joined") =!= col("orig"))
     assert(diff.isEmpty, "chunks must reassemble losslessly")
-    // every chunk except a doc's last is exactly maxTokens
+    // every chunk except a doc's last is exactly 64 tokens
     val bad = c.withColumn("last", max("chunk_idx").over(
         org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
       .filter(col("chunk_idx") < col("last") && col("n_chunk_tokens") =!= 64)

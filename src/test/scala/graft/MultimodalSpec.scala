@@ -13,7 +13,7 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.forall(_.payload.nonEmpty))
   }
 
-  test("batched feature extraction: histogram conserves byte count") {
+  test("feature extraction: histogram conserves byte count") {
     val f = Multimodal.extractFeatures(media).collect()
     assert(f.length == 500)
     assert(f.forall(x => x.hist0 + x.hist1 + x.hist2 + x.hist3 == x.n_bytes))
@@ -84,11 +84,19 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("deterministic embedding has fixed dim and reproducible values") {
-    val e1 = Multimodal.embed(media).collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val e2 = Multimodal.embed(media).collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(e1.keySet.size == 500)
-    assert(e1.forall(_._2.length == 16))
-    assert(e1 == e2)
+  test("payload encoders leave every other media kind byte-identical") {
+    val before = media.collect().map(m => m.media_id -> m).toMap
+    for ((kind, encoded) <- Seq("image" -> Multimodal.withPngPayload(media),
+        "audio" -> Multimodal.withWavPayload(media))) {
+      val after = encoded.collect()
+      assert(after.map(_.media_id).sorted.toSeq == before.keys.toSeq.sorted, kind)
+      after.filter(_.kind != kind).foreach { m =>
+        val b = before(m.media_id)
+        assert(m.payload.sameElements(b.payload) && m.copy(payload = b.payload) == b,
+          s"$kind encoder changed ${m.kind} media ${m.media_id}")
+      }
+      assert(after.exists(m => m.kind == kind && !m.payload.sameElements(before(m.media_id).payload)),
+        s"$kind encoder rewrote no $kind payload")
+    }
   }
 }

@@ -105,6 +105,19 @@ class ParseSpec extends SparkSpec {
     assert(field("EVENT commit xid=7\t", "xid").contains(7L))
     for (x <- Seq("5.5", "5.0", "1e3", "5."))
       assert(field(s"EVENT commit xid=$x", "xid").isEmpty, x)
+    // one integer grammar for both engines (Parse.IntToken): only ASCII
+    // whitespace \t..\r may pad the digits; any other control character,
+    // NEL, U+2028, an empty token or an overflow reads null
+    val grammar = Seq("5" -> Some(5), "-3" -> Some(-3), "+7" -> Some(7), "007" -> Some(7),
+      "5.5" -> None, "5\u0001" -> None, "\u00015" -> None, "5\t" -> Some(5), "\t5" -> Some(5),
+      "5\u000b" -> Some(5), "5\u001f" -> None, "5\u007f" -> None, "5\u0085" -> None,
+      "5\u2028" -> None, "abc" -> None, "" -> None, "9223372036854775808" -> None,
+      "5\u0000" -> None)
+    for ((t, want) <- grammar) {
+      val shown = t.map(_.toInt.toHexString).mkString("token [", " ", "]")
+      assert(field(s"EVENT commit xid=$t", "xid") == want.map(_.toLong), shown)
+      assert(field(s"EVENT insert rows=$t vals=[1|a]", "rows_declared") == want, shown)
+    }
     assert(field("EVENT commit", "xid").isEmpty)
     assert(field("EVENT insert rows=x vals=[1|a]", "rows_declared").isEmpty)
     assert(field("EVENT insert rows=1 vals=[1|a]", "rows_declared").contains(1))
