@@ -2,6 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
@@ -22,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
   *    candidates are the same-bucket vectors ([[lshTopKMulti]] for top-k,
   *    [[cosineNearDup]] for near-duplicate pairs).
   *  - [[probeCentroids]]: a vector's best centroids of the trained k-means
-  *    codebook, row-local against one broadcast codebook row. With one
+  *    codebook, row-local against the codebook inlined as a literal. With one
   *    probe it is the IVF inverted-list assignment ([[assignCentroids]]);
   *    with several it picks the lists an IVF query reranks ([[ivfTopK]])
   *    and the clusters a vector pairs within ([[semDedupPairs]]).
@@ -40,7 +41,11 @@ object Similarity {
     */
   def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
+  /** An `array<float>` column as `array<double>`: a built-in cast, which is
+    * compiled (a `transform` lambda is evaluated interpreted per element)
+    * and exact (widening a float to a double loses nothing).
+    */
+  private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** The rank window: `scored` (q, neighbor, sim) cut to each q's `k`
     * best neighbors by (sim desc, neighbor asc). Output: (q, rank, neighbor).
@@ -172,7 +177,19 @@ object Similarity {
     * Eager: runs its one Spark job when called.
     */
   def trainCentroids(emb: DataFrame, k: Int, iters: Int = 1,
-      sampleN: Int = 4096): DataFrame = {
+      sampleN: Int = 4096): DataFrame =
+    emb.sparkSession.createDataFrame(
+      java.util.Arrays.asList(codebook(emb, k, iters, sampleN): _*), Codebook)
+
+  /** (cent_id, cent_emb) of a codebook row. */
+  private val Codebook = StructType(Seq(StructField("cent_id", LongType, nullable = false),
+    StructField("cent_emb", ArrayType(DoubleType, containsNull = true))))
+
+  /** [[trainCentroids]]' codebook as driver rows of [[Codebook]], the form
+    * [[probe]] inlines; the defaults are trainCentroids'.
+    */
+  private def codebook(emb: DataFrame, k: Int, iters: Int = 1,
+      sampleN: Int = 4096): Seq[Row] = {
     type Vec = Array[java.lang.Double]
     val sample: Array[Vec] = emb
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
@@ -228,18 +245,27 @@ object Similarity {
         }
       }.toArray
     }
-    val schema = StructType(Seq(StructField("cent_id", LongType, nullable = false),
-      StructField("cent_emb", ArrayType(DoubleType, containsNull = true))))
-    val rows = cents.indices.map(c =>
-      Row(c.toLong, Option(cents(c)).map(_.toSeq).orNull))
-    emb.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    cents.indices.map(c => Row(c.toLong, Option(cents(c)).map(_.toSeq).orNull))
+  }
+
+  /** Each vector's `nProbe` best centroids of the codebook `cents`
+    * (cent_id, cent_emb) by cosine: [[probe]] over its rows, which are
+    * collected when this is called (a codebook has at most k rows). A null
+    * cent_id fails here, since it would name no centroid.
+    */
+  private[graft] def probeCentroids(emb: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    val rows = cents.select(col("cent_id").cast("long"), col("cent_emb").cast("array<double>"))
+      .collect()
+    require(rows.forall(!_.isNullAt(0)), "a codebook row has a null cent_id")
+    probe(emb, rows.toSeq, nProbe)
   }
 
   /** Each vector's `nProbe` best centroids by cosine, row-local: the
-    * codebook collapses to ONE row carrying every (cent_id, cent_emb),
-    * broadcast onto `emb`; each row sorts its per-centroid
-    * (score, -cent_id) structs descending and keeps the first `nProbe` —
-    * the (cscore DESC, cent_id ASC) window order with null scores last, so
+    * `codebook` rows are inlined into the plan as ONE literal
+    * `array<struct<cent_id, cent_emb>>` column, so no Spark job gathers or
+    * broadcasts them; each row sorts its per-centroid (score, -cent_id)
+    * structs descending and keeps the first `nProbe` — the
+    * (cscore DESC, cent_id ASC) window order with null scores last, so
     * ties break to the LOWEST cent_id, bit-identical to the DuckDB oracle
     * because the cosine is the same sequential fold. The rows are never
     * exchanged (VERDICT r02 #5: a rows×k join + vec_id window shuffled k×
@@ -247,13 +273,13 @@ object Similarity {
     * `array_sort`: the latter's default comparator is a lambda, evaluated
     * interpreted. Output: (vec_id, emb, cent_id), `nProbe` rows per vector.
     */
-  private[graft] def probeCentroids(emb: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
-    val codebook = cents.agg(collect_list(struct(col("cent_id"), col("cent_emb"))).as("cent_arr"))
-    val scored = transform(col("cent_arr"), c =>
+  private def probe(emb: DataFrame, codebook: Seq[Row], nProbe: Int): DataFrame = {
+    val cents = org.apache.spark.sql.GraftExpressionBridge.column(
+      Literal.create(codebook, ArrayType(Codebook, containsNull = false)))
+    val scored = transform(cents, c =>
       struct(cosine(col("emb"), c.getField("cent_emb")).as("s"),
         (-c.getField("cent_id")).as("negid")))
     emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .join(broadcast(codebook))
       .select(col("vec_id"), col("emb"),
         explode(slice(sort_array(scored, asc = false), 1, nProbe)).as("pc"))
       .select(col("vec_id"), col("emb"), (-col("pc.negid")).as("cent_id"))
@@ -281,19 +307,21 @@ object Similarity {
   }
 
   /** Approximate top-k via IVF over a 16-centroid codebook: probe each
-    * query's 4 best centroids ([[probeCentroids]] over the filtered query
-    * rows only), exact-rerank the union of their inverted lists
-    * ([[assignCentroids]]).
+    * query's 4 best centroids ([[probe]] over the filtered query rows
+    * only), exact-rerank the union of their inverted lists (one probe per
+    * vector, as [[assignCentroids]]). Both probes inline the one trained
+    * codebook.
     * Output: (q, rank, neighbor). At scale the corpus shuffles ONCE (by q,
     * into the rank window; the probes are broadcast) and each query
     * touches ~4/16 of the data.
+    * Runs its one training job ([[trainCentroids]]) when called.
     */
   def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val cents = trainCentroids(emb, 16)
-    val lists = assignCentroids(emb, cents)
+    val cents = codebook(emb, 16)
+    val lists = probe(emb, cents, 1)
       .select(col("cent_id"), col("vec_id").as("neighbor"), col("emb").as("c_emb"))
     val probes = broadcast(
-      probeCentroids(emb.filter(col("vec_id").isin(queryIds: _*)), cents, nProbe = 4)
+      probe(emb.filter(col("vec_id").isin(queryIds: _*)), cents, nProbe = 4)
         .select(col("vec_id").as("q"), col("emb").as("q_emb"), col("cent_id")))
     topK(lists.join(probes, Seq("cent_id"))
       .filter(col("q") =!= col("neighbor"))
@@ -378,21 +406,25 @@ object Similarity {
     * boundary — the recall knob, graded by `ann_semdedup_recall` exactly
     * like the LSH table-count knob.
     *
-    * Scale shape: probe assignment is ROW-LOCAL ([[probeCentroids]] — the
-    * corpus is never exchanged to find its clusters); the per-cluster pair
+    * Scale shape: probe assignment is ROW-LOCAL ([[probe]] — the
+    * corpus is never exchanged to find its clusters, and the trained
+    * codebook rides in the plan as a literal, so no job gathers or
+    * broadcasts it); the per-cluster pair
     * enumeration exchanges only narrow (cent_id, vec_id) pairs
     * (plan-asserted); embeddings join back once
     * per DISTINCT surviving candidate for the verify. At N vectors pick
     * nCentroids ∝ N/m for a target cluster size m, so per-cluster
-    * quadratic work stays m²-bounded while assignment stays one broadcast.
+    * quadratic work stays m²-bounded while assignment stays one
+    * row-local pass.
     * Output: (a, b) pairs with cosine ≥ threshold sharing ≥ 1 probed
     * cluster, a < b.
-    * Runs its one training job ([[trainCentroids]]) when called.
+    * Runs its one training job ([[trainCentroids]]) when called, and no
+    * other.
     */
   def semDedupPairs(emb: DataFrame, threshold: Double,
       nCentroids: Int = 16, nProbe: Int = 2): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    val probed = probeCentroids(emb, trainCentroids(emb, nCentroids), nProbe)
+    val probed = probe(emb, codebook(emb, nCentroids), nProbe)
       .select(col("cent_id"), col("vec_id"))
     verified(graft.dedup.Dedup.bucketPairs(probed, Seq("cent_id"), "vec_id"), base, threshold)
   }

@@ -115,7 +115,7 @@ object Dedup {
     // made the pair stage ~10% slower (4.35M pairs from 30-member buckets,
     // local[4])
     val members = id +: carry
-    val sorted = array_sort(collect_list(
+    val sorted = sort_array(collect_list(
       if (carry.isEmpty) col(id) else struct(members.map(col): _*)))
     val ends = if (carry.isEmpty) Seq(col("a"), col("b")) else members.flatMap(c =>
       Seq("a", "b").map(e => col(e).getField(c).as(if (c == id) e else s"${c}_$e")))
@@ -221,17 +221,17 @@ object Dedup {
     * safely dereference keeper rows (ADVICE r02: a fixed `iters=3` left
     * keeper(x)=y with keeper(y)=z on chains of diameter > 3).
     *
-    * Each round is one aggregation with one shuffle keyed by doc id and no
-    * join (see [[propagateMin]]); the pair list is read once, by the first
-    * round, whose job also counts the graph's edges. A graph of at most
-    * [[DriverEdges]] edges is collected after that round and finished by
-    * union-find on the driver — LSH/cluster-verified dup graphs are
-    * typically this small, and each further round would cost ~150 ms of
-    * fixed Spark overhead for microseconds of work. Larger graphs keep
-    * propagating on the cluster, bounded by the largest component's
-    * diameter; `maxIters` is their runaway bound and applies above the
-    * budget only — hitting it throws rather than silently returning a
-    * non-fixed-point.
+    * The pair list is read once, by a job that materializes it and counts
+    * the graph's edges (see [[propagateMin]]). A graph of at most
+    * [[DriverEdges]] edges is then collected and resolved by union-find on
+    * the driver, with no round on the cluster — LSH/cluster-verified dup
+    * graphs are typically this small, and each round would cost ~150 ms of
+    * fixed Spark overhead for microseconds of work. A larger graph
+    * propagates on the cluster from the materialized pairs, one
+    * aggregation with one shuffle keyed by doc id and no join per round,
+    * bounded by the largest component's diameter; `maxIters` is its
+    * runaway bound and applies above the budget only — hitting it throws
+    * rather than silently returning a non-fixed-point.
     * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
   def resolveKeepers(pairs: DataFrame, maxIters: Int = 50): DataFrame =
@@ -248,8 +248,8 @@ object Dedup {
     * propagation's scale shape (the struct adds a constant-width column to
     * the same per-round aggregation). `priority`: (doc_id, prio); missing
     * docs default to prio 0, and a doc with several rows takes its highest.
-    * It is joined onto both ends of each pair once, inside the first
-    * round's job.
+    * It is joined onto both ends of each pair once, inside the job that
+    * materializes the pair list.
     * Output: (doc_id, keeper).
     * Eager: runs Spark jobs when called and truncates lineage (`localCheckpoint`).
     */
@@ -257,15 +257,15 @@ object Dedup {
       maxIters: Int = 50): DataFrame =
     resolve(pairs, Some(priority), maxIters, DriverEdges)
 
-  /** Largest pair graph [[resolveKeepers]] finishes on the driver, in
+  /** Largest pair graph [[resolveKeepers]] resolves on the driver, in
     * edges (input pair rows). Measured on synthetic graphs (local[4], 16
-    * shuffle partitions, 2 GB heap, 4-core host), driver finish vs further
-    * rounds, each including the shared first round: on 8-node chains
-    * (seven more rounds) the driver won at every size up to 2^20 edges; on
-    * 5-cliques (one more round) it won at 2^16 (0.6 s vs 0.9 s) and 2^17
-    * (0.9 s vs 1.1 s), broke even at 2^18 and lost at 2^20 (4.5-5.0 s vs
-    * 2.9-3.5 s). The collected first-round state held ~200 B per edge:
-    * 27 MB at 2^17 edges, 217 MB at 2^20.
+    * shuffle partitions, 2 GB heap, 4-core host), the whole resolve with
+    * the driver path vs the rounds on the cluster, medians of three: on
+    * 8-node chains (eight rounds) 0.46 / 0.74 / 1.52 s vs 2.65 / 3.24 /
+    * 4.62 s at 2^16 / 2^17 / 2^18 edges; on 5-cliques (two rounds) 0.25 /
+    * 0.37 / 0.83 s vs 0.53 / 0.60 / 1.06 s. The collected pairs hold
+    * ~156 B per edge, 20 MB at 2^17 edges; an earlier driver finish from
+    * the first round's state lost to the rounds at 2^20 on cliques.
     */
   val DriverEdges: Long = 1L << 17
 
@@ -296,6 +296,11 @@ object Dedup {
     * type (see [[resolveKeepers]]). `pairs`: (a, la, b, lb), an undirected
     * edge with the starting label of each end.
     *
+    * The pair list is materialized first ([[checkpointed]]), and that job
+    * counts its edges. A graph of at most `driverEdges` edges is collected
+    * from it and resolved by [[finishOnDriver]], with no aggregation on the
+    * cluster. A larger graph propagates from it in rounds.
+    *
     * Node state is (x, keeper, nbrs, chg). The first round is fused into
     * building it: each pair is exploded into both directions in one pass
     * and one `groupBy(x)` collects the neighbor list and takes
@@ -308,12 +313,9 @@ object Dedup {
     * an earlier round, and each neighbor's keeper is ≤ it since.
     *
     * Convergence rides the round's own job: the count of changed nodes is a
-    * `Dataset.observe` metric on the round's `localCheckpoint`, which also
+    * `Dataset.observe` metric on the round's materialization, which also
     * truncates the lineage (VERDICT r02 #4) — one Spark action per round,
-    * no separate convergence query. The same observation sums the neighbor
-    * lists, two entries per input pair; after the first round a graph of at
-    * most `driverEdges` pairs that has not converged is finished by
-    * [[finishOnDriver]] instead.
+    * no separate convergence query.
     *
     * Plain one-hop rounds, deliberately: a pointer-jumping variant
     * (keeper ← min(keeper, labels[node(keeper)]) each round, O(log d)
@@ -323,7 +325,8 @@ object Dedup {
     * to every round.
     */
   private def propagateMin(pairs: DataFrame, maxIters: Int, driverEdges: Long): DataFrame = {
-    val directed = pairs.select(explode(array(
+    val (edges, edgeCount) = checkpointed(pairs, count(lit(1)))
+    val directed = edges.select(explode(array(
       struct(col("a").as("x"), col("la").as("lx"), col("b").as("y"), col("lb").as("ly")),
       struct(col("b").as("x"), col("lb").as("lx"), col("a").as("y"), col("la").as("ly"))
     )).as("e")).select("e.*")
@@ -331,6 +334,8 @@ object Dedup {
       .agg(min(col("lx")).as("lx"), min(col("ly")).as("ly"), collect_list(col("y")).as("nbrs"))
       .select(col("x"), least(col("lx"), col("ly")).as("keeper"), col("nbrs"),
         (col("ly") < col("lx")).as("chg"))
+    if (edgeCount <= driverEdges)
+      return finishOnDriver(edges, StructType(state.schema.fields.take(2)))
     val noLabel = lit(null).cast(state.schema("keeper").dataType)
     val noNbrs = lit(null).cast(state.schema("nbrs").dataType)
     def round(s: DataFrame): DataFrame = {
@@ -346,53 +351,62 @@ object Dedup {
     var it = 0
     while (changed > 0 && it < maxIters) {
       if (it > 0) state = round(state)
-      val obs = Observation()
-      state = state.observe(obs, count(when(col("chg"), 1)).as("changed"),
-        sum(size(col("nbrs"))).as("nbrs")).localCheckpoint()
-      changed = obs.get("changed").asInstanceOf[Long]
+      val (next, n) = checkpointed(state, count(when(col("chg"), 1)))
+      state = next
+      changed = n
       it += 1
-      if (it == 1 && changed > 0 && obs.get("nbrs").asInstanceOf[Long] / 2 <= driverEdges)
-        return finishOnDriver(state)
     }
     require(changed == 0, s"resolveKeepers did not converge in $maxIters iterations")
     state
   }
 
-  /** The fixed point of [[propagateMin]] from its first-round state
-    * (x, keeper, nbrs), computed on the driver: union-find over the
-    * collected neighbor lists, then every node takes the least first-round
-    * keeper of its component. That is the component's least label, because
-    * each node's label is folded into its own first-round keeper. Labels
-    * are integral ids or (rank, id) structs, the two [[resolve]] builds.
-    * Output: a local (x, keeper) DataFrame of the state's column types.
+  /** `df` materialized with its lineage truncated, and the value of the
+    * long-valued aggregate `metric` over its rows, observed by the same
+    * job: [[propagateMin]]'s one materialization site.
     */
-  private def finishOnDriver(state: DataFrame): DataFrame = {
-    val nodes = state.select("x", "keeper", "nbrs").collect()
+  private def checkpointed(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val done = df.observe(obs, metric.as("m")).localCheckpoint()
+    (done, obs.get("m").asInstanceOf[Long])
+  }
+
+  /** The fixed point of [[propagateMin]] computed on the driver from the
+    * collected pair list `pairs` (a, la, b, lb): union-find over the edges, then
+    * every node takes the least label of its component — the label
+    * propagation converges to. Labels are integral ids or (rank, id)
+    * structs, the two [[resolve]] builds; a node whose rows carry
+    * different labels (a doc with several priority rows) contributes each.
+    * Output: a local (x, keeper) DataFrame of `schema`.
+    */
+  private def finishOnDriver(pairs: DataFrame, schema: StructType): DataFrame = {
+    val edges = pairs.collect()
     def id(v: Any): Long = v.asInstanceOf[Number].longValue
-    val ids = nodes.map(n => id(n.get(0)))
-    java.util.Arrays.sort(ids)
-    def index(v: Any): Int = java.util.Arrays.binarySearch(ids, id(v))
-    val parent = Array.range(0, ids.length)
+    val index = scala.collection.mutable.LongMap.empty[Int]
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def node(v: Any): Int = index.getOrElseUpdate(id(v), { nodes += v; nodes.length - 1 })
+    val ends = edges.map(e => (node(e.get(0)), node(e.get(2))))
+    val parent = Array.range(0, nodes.length)
     def find(i: Int): Int = {
       var x = i
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    val pos = nodes.map(n => index(n.get(0)))
-    nodes.indices.foreach(i =>
-      nodes(i).getSeq[Any](2).foreach(y => parent(find(pos(i))) = find(index(y))))
+    ends.foreach { case (u, v) => parent(find(u)) = find(v) }
     def key(label: Any): (Long, Long) = label match {
       case r: Row => (r.getLong(0), id(r.get(1)))
       case v => (0L, id(v))
     }
-    val least = new Array[Any](ids.length)
-    nodes.indices.foreach { i =>
-      val (r, l) = (find(pos(i)), nodes(i).get(1))
-      if (least(r) == null || Ordering[(Long, Long)].lt(key(l), key(least(r)))) least(r) = l
+    val least = new Array[Any](nodes.length)
+    def fold(i: Int, label: Any): Unit = {
+      val r = find(i)
+      if (least(r) == null || Ordering[(Long, Long)].lt(key(label), key(least(r)))) least(r) = label
     }
-    val rows = nodes.indices.map(i => Row(nodes(i).get(0), least(find(pos(i)))))
-    state.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(state.schema.fields.take(2)))
+    edges.indices.foreach { k =>
+      fold(ends(k)._1, edges(k).get(1))
+      fold(ends(k)._2, edges(k).get(3))
+    }
+    val rows = nodes.indices.map(i => Row(nodes(i), least(find(i))))
+    pairs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** (doc_id, sh64): 64-bit SimHash over the token multiset — bit j is set

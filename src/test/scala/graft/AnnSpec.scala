@@ -163,24 +163,60 @@ class AnnSpec extends SparkSpec {
       s"inverted lists skewed: ${assigned.toList}")
   }
 
-  test("assignCentroids and probeCentroids ≡ a window top-nProbe (tie rule: lowest cent_id)") {
-    val cents = Similarity.trainCentroids(emb, k = 8)
+  private def probes(df: DataFrame): Set[(Long, Long)] =
+    df.select("vec_id", "cent_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+
+  /** Each vector's `nProbe` best centroids of `cents` by a rank window over
+    * the vector × centroid join: cosine descending, null scores last, ties
+    * to the lowest cent_id.
+    */
+  private def windowProbes(cents: DataFrame, nProbe: Int): Set[(Long, Long)] = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(col("cscore").desc, col("cent_id").asc)
-    val ranked = emb
+    probes(emb
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("emb"))
       .join(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
         Similarity.cosine(col("emb"), col("cent_emb")).as("cscore"))
       .withColumn("crank", row_number().over(w))
-    def probes(df: DataFrame): Set[(Long, Long)] =
-      df.select("vec_id", "cent_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      .filter(col("crank") <= nProbe))
+  }
+
+  test("assignCentroids and probeCentroids ≡ a window top-nProbe (tie rule: lowest cent_id)") {
+    val cents = Similarity.trainCentroids(emb, k = 8)
     val n = emb.count()
     for ((nProbe, got) <- Seq(1 -> Similarity.assignCentroids(emb, cents),
         4 -> Similarity.probeCentroids(emb, cents, 4))) {
-      assert(probes(got) == probes(ranked.filter(col("crank") <= nProbe)), s"nProbe=$nProbe")
+      assert(probes(got) == windowProbes(cents, nProbe), s"nProbe=$nProbe")
       assert(got.count() == nProbe * n, s"nProbe=$nProbe")
     }
+  }
+
+  test("probeCentroids: an empty codebook probes nothing; a null cent_emb ranks last; a null cent_id fails") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("cent_id", LongType),
+      StructField("cent_emb", ArrayType(DoubleType))))
+    def codebook(rows: Row*): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    assert(Similarity.probeCentroids(emb, codebook(), 2).isEmpty)
+    assert(Similarity.assignCentroids(emb, codebook()).isEmpty)
+    // a null centroid scores null for every vector, so it is probed only
+    // once both scored centroids are; it is also the lowest cent_id, so a
+    // tie rule that ignored the null would pick it first
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    val cents = codebook(Row(0L, null), Row(1L, Seq.fill(dim)(1.0)),
+      Row(2L, Seq.tabulate(dim)(i => if (i % 2 == 0) 1.0 else -1.0)))
+    val n = emb.count()
+    for (nProbe <- 1 to 3) {
+      val got = Similarity.probeCentroids(emb, cents, nProbe)
+      assert(probes(got) == windowProbes(cents, nProbe), s"nProbe=$nProbe")
+      assert(got.count() == nProbe * n, s"nProbe=$nProbe")
+    }
+    assert(probes(Similarity.probeCentroids(emb, cents, 2)).forall(_._2 != 0L))
+    // a null cent_id names no centroid: refused at the call
+    intercept[IllegalArgumentException](
+      Similarity.probeCentroids(emb, codebook(Row(null, Seq.fill(dim)(1.0))), 1))
   }
 
   test("IVF recall@5 vs brute force is usable (nProbe=4 of 16)") {

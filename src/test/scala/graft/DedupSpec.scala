@@ -71,7 +71,7 @@ class DedupSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 0L -> 4L, 4L -> 4L)
     assert(keepers(Dedup.resolveKeepersBy(pairs, prio)) == want)
-    // driver finish after round 1, and the distributed fixed point
+    // driver finish, and the distributed fixed point
     for (budget <- Seq(Long.MaxValue, 0L))
       assert(keepers(Dedup.resolve(pairs, Some(prio), maxIters = 50, driverEdges = budget)) == want)
   }
@@ -120,11 +120,12 @@ class DedupSpec extends SparkSpec {
   test("one Spark action per propagation round: the round's own localCheckpoint") {
     val actions = actionsOf(1)(pairs =>
       Dedup.resolve(pairs, None, maxIters = 50, driverEdges = 0).collect())
-    // the chain 10-11-12-13 changes labels in rounds 1-3; round 4 sees none
-    assert(actions == Seq.fill(4)("localCheckpoint") :+ "collect")
+    // the pair list's localCheckpoint, then one per round: the chain
+    // 10-11-12-13 changes labels in rounds 1-3; round 4 sees none
+    assert(actions == Seq.fill(5)("localCheckpoint") :+ "collect")
   }
 
-  test("a graph within the edge budget finishes on the driver after round 1: one checkpoint, one collect") {
+  test("an in-budget graph resolves on the driver: one checkpoint, one collect") {
     val actions = actionsOf(2)(pairs => Dedup.resolveKeepers(pairs).collect())
     assert(actions == Seq("localCheckpoint", "collect", "collect"))
   }

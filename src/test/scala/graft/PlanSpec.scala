@@ -140,18 +140,18 @@ class PlanSpec extends SparkSpec {
     assert(windows.size == 1, s"expected one WindowExec (the top-k rank):\n$exec")
   }
 
-  /** Executed plan of the first Spark query that `run` starts, captured
-    * when it finishes (listener events arrive asynchronously; only queries
-    * created after `since` count); null if none finished within 60 s.
+  /** The first `n` Spark queries that `run` starts, in order, captured
+    * when they finish (listener events arrive asynchronously; only queries
+    * created after `since` count); fewer if they did not finish within 60 s.
     */
-  private def firstPlanOf(run: => Unit): String = {
+  private def queriesOf(n: Int)(run: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     @volatile var since = Long.MaxValue
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.id > since) plans.add(qe.executedPlan.toString)
+        if (qe.id > since) queries.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -159,10 +159,16 @@ class PlanSpec extends SparkSpec {
       since = spark.range(1).queryExecution.id
       run
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      plans.peek()
+      while (queries.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+      queries.toArray(Array.empty[QueryExecution]).toSeq.take(n)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Executed plan of the first Spark query that `run` starts; null if none
+    * finished within 60 s.
+    */
+  private def firstPlanOf(run: => Unit): String =
+    queriesOf(1)(run).headOption.map(_.executedPlan.toString).orNull
 
   test("IVF training samples via distributed top-N, never a global corpus sort (VERDICT r03 #7)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -180,6 +186,47 @@ class PlanSpec extends SparkSpec {
     // is being range-exchanged.
     val globalSorts = "Sort \\[[^\\]]*\\], true".r.findAllIn(p).toList
     assert(globalSorts.isEmpty, s"global sort in training plan:\n$p")
+  }
+
+  test("probeCentroids inlines the codebook: no aggregate, exchange or broadcast") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val emb = s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val cents = graft.ann.Similarity.trainCentroids(emb, 8)
+    for (probed <- Seq(graft.ann.Similarity.assignCentroids(emb, cents),
+        graft.ann.Similarity.probeCentroids(emb, cents, 3))) {
+      val exec = probed.queryExecution.executedPlan
+      val shapes = exec.collect {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }
+      assert(shapes.isEmpty, s"the codebook is gathered or broadcast:\n$exec")
+    }
+  }
+
+  test("an in-budget resolve plans no aggregate keyed on x") {
+    import graft.dedup.Dedup
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    val prio = Seq((1L, 5L), (3L, 9L)).toDF("doc_id", "prio")
+    // the optimized plans of every query the resolve runs, through its final collect
+    def plans(n: Int)(keepers: => org.apache.spark.sql.DataFrame) =
+      queriesOf(n)(keepers.collect()).map(_.optimizedPlan)
+    def keyedOnX(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = p.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+          if a.groupingExpressions.exists(_.references.exists(_.name == "x")) => a
+    }
+    for ((name, priority) <- Seq("min id" -> None, "priority" -> Some(prio))) {
+      // the pair list's checkpoint, its collect, and the final collect
+      val driver = plans(3)(Dedup.resolve(pairs, priority, 50, Dedup.DriverEdges))
+      assert(driver.size == 3, s"$name: ${driver.size} queries")
+      assert(driver.forall(keyedOnX(_).isEmpty), s"$name: aggregate keyed on x:\n${driver.mkString("\n")}")
+      // the distributed path's first round is one, so the match can see it
+      val distributed = plans(2)(Dedup.resolve(pairs, priority, 50, 0L))
+      assert(distributed.exists(keyedOnX(_).nonEmpty), s"$name: no round aggregate seen")
+    }
   }
 
   test("cosineNearDup shuffles only narrow triples into the candidate self-join (VERDICT r04 #1)") {

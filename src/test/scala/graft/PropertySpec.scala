@@ -191,7 +191,7 @@ class PropertySpec extends SparkSpec {
       assert(keepers(Dedup.resolveKeepersBy(df, prioDf)) == byPrio,
         s"priority keepers differ on $pairs with $prioRows")
       // both execution paths, whatever the edge budget picks: the driver
-      // finish after round 1, and the distributed fixed point
+      // finish, and the distributed fixed point
       Seq("driver" -> Long.MaxValue, "distributed" -> 0L).foreach { case (name, budget) =>
         assert(keepers(Dedup.resolve(df, None, 50, budget)) == byId,
           s"$name lowest-id keepers differ on $pairs")
